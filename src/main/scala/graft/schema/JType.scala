@@ -41,7 +41,25 @@ case object JDouble extends JType
 case object JBool extends JType
 final case class JArr(elem: JType) extends JType
 /** First-seen field order preserved. */
-final case class JStruct(fields: Vector[(String, JType)]) extends JType
+final case class JStruct(fields: Vector[(String, JType)]) extends JType {
+  /** Field position by name for [[JsonShape.fold]]'s subsumption walk;
+    * -1 marks a name held twice. Built on the first lookup (only
+    * accumulators are ever looked up) and dropped with the struct. */
+  @transient private lazy val slots: java.util.HashMap[String, Integer] = {
+    val m = new java.util.HashMap[String, Integer](fields.size * 2)
+    var i = 0
+    fields.foreach { case (k, _) =>
+      m.put(k, if (m.containsKey(k)) -1 else i)
+      i += 1
+    }
+    m
+  }
+  /** Position of the one field named `name`; -1 when absent or held twice. */
+  private[schema] def slot(name: String): Int = {
+    val i = slots.get(name)
+    if (i == null) -1 else i
+  }
+}
 /** String-keyed map — never produced by raw inference (JSON objects
   * parse as [[JStruct]], like the reference, `CreateHQL.scala:57-61`);
   * introduced by the post-aggregation [[JType.mapify]] normalization

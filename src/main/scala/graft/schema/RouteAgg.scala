@@ -10,9 +10,14 @@ import org.apache.spark.sql.types.StructType
   * infer (`HiveSchemaGenerator.scala:75,98`) — and SURVEY.md §4 calls that
   * out as the thing not to reproduce at 100 TB. This aggregator folds
   * both concerns into a single partial+final aggregation: each line is
-  * parsed exactly once; valid JSON objects merge into the running schema,
-  * everything else only bumps the invalid counter. Only O(schema)+2 longs
-  * cross the wire per partition.
+  * walked once by [[JsonShape.fold]]; valid JSON objects fold into the
+  * running schema, everything else only bumps the invalid counter. Only
+  * O(schema)+2 longs cross the wire per partition.
+  *
+  * Subsumption contract: a line leaves the schema slot the same object
+  * (`eq`) iff merging its shape would not change it; such a line builds
+  * no shape and runs no merge. A line nested deeper than
+  * [[JsonShape.MaxDepth]] counts as invalid.
   */
 final case class RouteStats(schemaJson: String, nValid: Long, nInvalid: Long) {
   def schema: Option[StructType] = SchemaInference.schemaFromJson(schemaJson)
@@ -23,11 +28,13 @@ final class RouteAgg(typed: Boolean)
 
   override def zero: (JType, Long, Long) = (JNull, 0L, 0L)
 
-  override def reduce(b: (JType, Long, Long), line: String): (JType, Long, Long) =
-    JsonShape.of(line, typed) match {
-      case Some(s: JStruct) => (JType.merge(b._1, s, typed), b._2 + 1, b._3)
-      case _                => (b._1, b._2, b._3 + 1)
-    }
+  /** The schema slot only ever folds valid objects, so it is never
+    * [[JTop]], and [[JsonShape.fold]] returning `JTop` means the line is
+    * invalid. */
+  override def reduce(b: (JType, Long, Long), line: String): (JType, Long, Long) = {
+    val s = JsonShape.fold(b._1, line, typed)
+    if (s eq JTop) (b._1, b._2, b._3 + 1) else (s, b._2 + 1, b._3)
+  }
 
   override def merge(a: (JType, Long, Long), b: (JType, Long, Long)): (JType, Long, Long) =
     (JType.merge(a._1, b._1, typed), a._2 + b._2, a._3 + b._3)

@@ -17,9 +17,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * bytes, which is what makes this design scale where the reference's
   * single-threaded loop cannot.
   *
-  * Rows that are not valid single JSON objects poison the result to
-  * [[JTop]]; pre-filter with [[graft.functions.Fns.json_is_object]] to
-  * route them to an invalid side instead (SURVEY.md §2 op #3/#11).
+  * Each row folds in through [[JsonShape.fold]]. Subsumption contract: a
+  * row leaves the buffer the same object (`eq`) iff merging its shape
+  * would not change it; such a row builds no shape and runs no merge.
+  *
+  * Rows that are not valid single JSON objects, including rows nested
+  * deeper than [[JsonShape.MaxDepth]], poison the result to [[JTop]];
+  * pre-filter with [[graft.functions.Fns.json_is_object]] to route them
+  * to an invalid side instead (SURVEY.md §2 op #3/#11).
   *
   * @param typed false = the reference's STRING-only Hive lattice
   *              (`CreateHQL.scala:81`); true = LONG/DOUBLE/BOOLEAN/STRING.
@@ -27,7 +32,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 final class SchemaAgg(typed: Boolean) extends Aggregator[String, JType, String] {
   override def zero: JType = JNull
   override def reduce(b: JType, line: String): JType =
-    JType.merge(b, JsonShape.ofRecord(line, typed), typed)
+    JsonShape.fold(b, line, typed)
   override def merge(a: JType, b: JType): JType = JType.merge(a, b, typed)
   /** Lossless Spark DataType JSON (parse back with [[SchemaInference.schemaFromJson]]). */
   override def finish(r: JType): String = JType.toDataType(r) match {

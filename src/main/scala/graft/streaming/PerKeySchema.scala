@@ -25,7 +25,7 @@ object PerKeySchema {
       .map(j => JType.fromDataType(DataType.fromJson(j)))
       .getOrElse(graft.schema.JNull)
     val merged = rows.foldLeft(prior) { case (acc, (_, json)) =>
-      JType.merge(acc, JsonShape.ofRecord(json, typed), typed)
+      JsonShape.fold(acc, json, typed)
     }
     JType.toDataType(merged) match {
       case s: StructType =>

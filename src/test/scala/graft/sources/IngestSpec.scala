@@ -86,6 +86,18 @@ class IngestSpec extends AnyFunSpec {
         JsonIngest.readLines(spark, path), "value")
       assert(stats.nValid == 0 && stats.nInvalid == 2 && stats.schema.isEmpty)
     }
+    it("counts lines nested past the cap as invalid without failing the job") {
+      val cap = graft.schema.JsonShape.MaxDepth
+      def nested(n: Int): String = "{\"deep\":" * n + "1" + "}" * n
+      val path = writeNdjson(goodLines ++ Seq(nested(cap), nested(cap + 1), nested(500), nested(900)))
+      val lines = JsonIngest.readLines(spark, path)
+      val stats = JsonIngest.inferRoutedStats(lines, "value")
+      assert(stats.nValid == 7 && stats.nInvalid == 3)
+      // The line at the cap lands in the schema and survives its round trip.
+      assert(stats.schema.get.fieldNames.contains("deep"))
+      val routed = JsonIngest.route(lines)
+      assert(routed.valid.count() == 7 && routed.invalid.count() == 3)
+    }
   }
 
   describe("routeWrite (one-scan two-sink routing)") {
