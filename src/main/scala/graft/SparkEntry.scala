@@ -16,7 +16,7 @@ object SparkEntry {
 
   /** Flagship: the reference's whole pipeline (validate + route + infer +
     * DDL) over events.props at sf0.001 — ONE scan, one parse per line via
-    * [[graft.schema.RouteAgg]] — folded into one summary row (rows > 0). */
+    * `inferRoutedStats`'s partition fold — folded into one row (rows > 0). */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
     val stats = graft.sources.JsonIngest

@@ -13,9 +13,10 @@ import graft.schema.Ddl
   * Hive-flavored statement (for parity / external metastores) and execute a
   * Spark-SQL equivalent against the session catalog. `ROW FORMAT SERDE`
   * requires Hive support, so the executable path uses `USING JSON` with the
-  * same schema + location; with `enableHiveSupport()` the JsonSerDe
-  * statement itself can be executed instead (kept behind `hiveMode` —
-  * offline test env has no metastore service, SURVEY.md §7.4).
+  * same schema + location; with `enableHiveSupport()` the Hive statement
+  * itself can be executed instead (kept behind `hiveMode` — offline test
+  * env has no metastore service, SURVEY.md §7.4) with the shipped
+  * [[graft.hive.JsonLineSerDe]] in place of the absent hcatalog serde.
   */
 object Register {
 
@@ -30,7 +31,8 @@ object Register {
     val hiveDdl = Ddl.createExternalTable(schema, name, location)
     if (hiveMode) {
       spark.sql(s"DROP TABLE IF EXISTS $name")
-      spark.sql(Ddl.createStatement(schema, name, location))
+      spark.sql(Ddl.createStatement(schema, name, location,
+        serde = classOf[graft.hive.JsonLineSerDe].getName))
     } else {
       Ddl.createTableSparkSql(schema, name, location).foreach(spark.sql(_))
     }

@@ -70,8 +70,8 @@ object Parity {
       Some(constOracle(expectedDdl("BIGINT"), "ddl")))
     ,
     Q("p04_route_infer_single_pass",
-      "Validate + route-count + infer + DDL in ONE aggregation pass " +
-        "(RouteAgg): the scalable form of the reference's read-twice loop.",
+      "Validate + route-count + infer + DDL in ONE pass (a per-partition " +
+        "fold): the scalable form of the reference's read-twice loop.",
       (s, dir) => {
         val stats = JsonIngest.inferRoutedStats(events(s, dir), "props")
         val ddl = stats.schema

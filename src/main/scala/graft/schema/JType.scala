@@ -28,7 +28,7 @@ package graft.schema
   *    (`CreateHQL.scala:91`).
   *
   * The merge is associative and commutative-up-to-field-order, so it
-  * distributes as a partial + final aggregation (see [[SchemaAgg]]).
+  * distributes (see [[SchemaInference.routedStats]] and [[SchemaAgg]]).
   */
 sealed trait JType extends Serializable
 

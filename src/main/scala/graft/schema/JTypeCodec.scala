@@ -12,10 +12,12 @@ import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoders, Codec, Expressi
   * [[SchemaAgg]]'s buffer crosses the wire on every partial→final merge
   * and is re-serialized whenever the object-hash aggregate spills (the
   * per-key inference path `p06_group_schemas` can hold millions of group
-  * buffers at 100 TB). Generic kryo pays for class-name metadata and
-  * reflective dispatch on every such event; this codec writes a preorder
-  * tag-byte tree — a few bytes per schema node, allocation-free dispatch
-  * — via Spark 4's public `TransformingEncoder`/`Codec` extension point.
+  * buffers at 100 TB), and each partition of [[SchemaInference.routedStats]]
+  * returns its schema in this form. Generic kryo pays for class-name
+  * metadata and reflective dispatch on every such event; this codec
+  * writes a preorder tag-byte tree — a few bytes per schema node,
+  * allocation-free dispatch — via Spark 4's public
+  * `TransformingEncoder`/`Codec` extension point.
   *
   * Format: tag byte (one per node); `JArr` = tag + element;
   * `JStruct` = tag + field count + (length-prefixed UTF-8 name + node)

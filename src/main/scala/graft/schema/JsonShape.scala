@@ -1,6 +1,7 @@
 package graft.schema
 
 import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonParser, JsonToken, StreamReadConstraints}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Streaming (token-level, no DOM) extraction of a JSON record's ''shape''.
@@ -102,29 +103,39 @@ object JsonShape {
     * accumulator absorbs every line unparsed. */
   def fold(acc: JType, line: String, typed: Boolean): JType =
     if (acc eq JTop) JTop
-    else walk(line, acc, typed, anyValue = false) match {
-      case Covered => acc
-      case Invalid => JTop
-      case _ =>
-        val merged = JType.merge(acc, ofRecord(line, typed), typed)
-        // A line can leave `acc` equal while the walk gave up on it: an
-        // earlier duplicate key that the last one overrides, or a name
-        // `acc` itself holds twice.
-        if (merged == acc) acc else merged
-    }
+    else settle(acc, walk(parser(line), acc, typed, anyValue = false), line, typed)
+
+  /** [[fold]] over a row's UTF-8 bytes, parsed where they sit: equals
+    * `fold(acc, line.toString, typed)`, `eq` included. A null row is
+    * invalid. */
+  def fold(acc: JType, line: UTF8String, typed: Boolean): JType =
+    if (acc eq JTop) JTop
+    else settle(acc, walk(parser(line), acc, typed, anyValue = false), line, typed)
+
+  /** The fold step once `line` (a `String` or a `UTF8String`) was walked;
+    * it is decoded only when it widens `acc`. */
+  private def settle(acc: JType, walked: Int, line: AnyRef, typed: Boolean): JType = walked match {
+    case Covered => acc
+    case Invalid => JTop
+    case _ =>
+      val merged = JType.merge(acc, ofRecord(line.toString, typed), typed)
+      // `acc` can come out equal though the walk gave up: a duplicate key
+      // that a later one overrides, or a name `acc` itself holds twice.
+      if (merged == acc) acc else merged
+  }
 
   private final val Covered = 0
   private final val Widens = 1
   private final val Invalid = 2
 
-  /** Walks `line` against `acc`: [[Covered]] when it is one complete JSON
-    * value (an object unless `anyValue`) that `acc` subsumes, [[Invalid]]
-    * when it is none, [[Widens]] when the walk stopped at a value `acc`
-    * does not subsume. With `acc` = [[JStr]], which subsumes every value,
-    * the walk only skips containers: that is the validity check. */
-  private def walk(line: String, acc: JType, typed: Boolean, anyValue: Boolean): Int = {
-    if (line == null) return Invalid
-    val p = factory.createParser(line)
+  /** Walks the line `p` reads against `acc`: [[Covered]] when it is one
+    * complete JSON value (an object unless `anyValue`) that `acc` subsumes,
+    * [[Invalid]] when it is none (a null `p` is a null line), [[Widens]]
+    * when the walk stopped at a value `acc` does not subsume. With `acc` =
+    * [[JStr]], which subsumes every value, the walk only skips containers:
+    * that is the validity check. */
+  private def walk(p: JsonParser, acc: JType, typed: Boolean, anyValue: Boolean): Int = {
+    if (p == null) return Invalid
     try {
       val t = p.nextToken()
       if (t == null || (t != JsonToken.START_OBJECT && !anyValue)) Invalid
@@ -134,6 +145,49 @@ object JsonShape {
     } catch {
       case _: Exception => Invalid
     } finally p.close()
+  }
+
+  private def parser(line: String): JsonParser =
+    if (line == null) null else factory.createParser(line)
+
+  /** Over the row's bytes where they sit when [[inPlace]] holds, else over
+    * `toString` (malformed bytes read as U+FFFD); null for a null row. */
+  private def parser(s: UTF8String): JsonParser =
+    if (s == null) null
+    else s.getBaseObject match {
+      case b: Array[Byte] if inPlace(s) =>
+        factory.createParser(b, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+      case _ => factory.createParser(s.toString)
+    }
+
+  /** True iff Jackson decodes `s` as `toString` does: well-formed UTF-8
+    * (Unicode Table 3-7) that Jackson's encoding detection takes for UTF-8
+    * (no NUL in the first four bytes, no byte-order mark). */
+  private def inPlace(s: UTF8String): Boolean = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    def at(i: Int): Int = if (i < n) Platform.getByte(base, off + i) & 0xff else -1
+    if (at(0) == 0 || at(1) == 0 || at(2) == 0 || at(3) == 0 ||
+        (at(0) == 0xef && at(1) == 0xbb && at(2) == 0xbf)) return false
+    var i = 0
+    while (i < n) {
+      if (i + 8 <= n && (Platform.getLong(base, off + i) & 0x8080808080808080L) == 0) i += 8
+      else if (at(i) < 0x80) i += 1
+      else {
+        // The sequence `b` leads: its length and its second byte's range.
+        val b = at(i)
+        val len =
+          if (b < 0xc2) 0 else if (b < 0xe0) 2 else if (b < 0xf0) 3 else if (b < 0xf5) 4 else 0
+        val lo = if (b == 0xe0) 0xa0 else if (b == 0xf0) 0x90 else 0x80
+        val hi = if (b == 0xed) 0x9f else if (b == 0xf4) 0x8f else 0xbf
+        if (len == 0 || at(i + 1) < lo || at(i + 1) > hi) return false
+        var k = 2
+        while (k < len) { if ((at(i + k) & 0xc0) != 0x80) return false; k += 1 }
+        i += len
+      }
+    }
+    true
   }
 
   /** True iff `JType.merge(acc, shape of the value at t) == acc`. Reads the
@@ -172,17 +226,13 @@ object JsonShape {
         (acc eq s) || (acc eq JStr) || ((acc eq JDouble) && (s eq JLong))
     }
 
-  /** True iff the string is exactly one parseable JSON value. */
-  def isValid(json: String): Boolean = walk(json, JStr, typed = false, anyValue = true) == Covered
-
-  /** Codegen entry point for [[graft.functions.JsonIsValid]]. */
-  def isValidUTF8(s: UTF8String): Boolean = s != null && isValid(s.toString)
+  /** True iff the row is exactly one parseable JSON value; codegen entry
+    * point for [[graft.functions.JsonIsValid]]. */
+  def isValidUTF8(s: UTF8String): Boolean =
+    walk(parser(s), JStr, typed = false, anyValue = true) == Covered
 
   /** True iff valid JSON AND the top level is an object — the contract a
     * record must meet to contribute to table-schema inference. */
-  def isValidObject(json: String): Boolean =
-    walk(json, JStr, typed = false, anyValue = false) == Covered
-
   def isValidObjectUTF8(s: UTF8String): Boolean =
-    s != null && isValidObject(s.toString)
+    walk(parser(s), JStr, typed = false, anyValue = false) == Covered
 }

@@ -1,11 +1,11 @@
 package graft.schema
 
-import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{StringType, StructType}
 
-/** Distributed schema inference as a typed [[Aggregator]].
+/** Per-group schema inference (SQL, `groupBy`) as a typed [[Aggregator]].
   *
   * The reference's core computation is a sequential fold
   * `schema ← merge(schema, parse(line))` over NDJSON lines
@@ -13,9 +13,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * identity [[JNull]], the same fold distributes as a standard Spark
   * partial + final aggregation: each partition folds its rows into one
   * O(schema) buffer, and only the tiny per-partition schemas cross the
-  * wire — never rows. At 100 TB the driver sees O(partitions × |schema|)
-  * bytes, which is what makes this design scale where the reference's
-  * single-threaded loop cannot.
+  * wire — never rows.
   *
   * Each row folds in through [[JsonShape.fold]]. Subsumption contract: a
   * row leaves the buffer the same object (`eq`) iff merging its shape
@@ -34,13 +32,21 @@ final class SchemaAgg(typed: Boolean) extends Aggregator[String, JType, String] 
   override def reduce(b: JType, line: String): JType =
     JsonShape.fold(b, line, typed)
   override def merge(a: JType, b: JType): JType = JType.merge(a, b, typed)
-  /** Lossless Spark DataType JSON (parse back with [[SchemaInference.schemaFromJson]]). */
+  /** Lossless Spark DataType JSON (parse back with `DataType.fromJson`). */
   override def finish(r: JType): String = JType.toDataType(r) match {
     case s: StructType => s.json
     case _             => SchemaInference.InvalidSchema
   }
   override def bufferEncoder: Encoder[JType] = JTypeCodec.encoder
   override def outputEncoder: Encoder[String] = Encoders.STRING
+}
+
+/** [[SchemaInference.routedStats]]'s result: the valid rows' merged
+  * lattice value, lowered to Spark types only on demand, and the counts. */
+final case class RouteStats(shape: JType, nValid: Long, nInvalid: Long) {
+  /** The table schema; None when no row was a valid JSON object. */
+  def schema: Option[StructType] =
+    Some(JType.toDataType(shape)).collect { case s: StructType if nValid > 0 => s }
 }
 
 object SchemaInference {
@@ -63,11 +69,36 @@ object SchemaInference {
   }
 
   /** Whole-dataset inference: fold every row of `lines` into one schema.
-    * Returns None when the input contained no usable JSON objects. */
+    * None unless every row, and at least one, is a valid JSON object. */
   def infer(lines: Dataset[String], typed: Boolean = false): Option[StructType] = {
-    val json = lines.select(infer_schema_agg(lines.col(lines.columns.head), typed))
-      .as(Encoders.STRING).head()
-    schemaFromJson(json)
+    val stats = routedStats(lines.toDF(), lines.columns.head, typed)
+    if (stats.nInvalid > 0) None else stats.schema
+  }
+
+  /** Routing + schema inference in ONE pass over `col`, a string column.
+    * Each partition folds its rows' UTF-8 bytes through [[JsonShape.fold]]:
+    * valid JSON objects widen its schema, any other row (null included)
+    * counts invalid. The partitions' [[JTypeCodec]] buffers are collected
+    * and merged in partition-index order, so the job has one stage and no
+    * shuffle, and the schema equals the sequential fold, field order
+    * included ([[JType.merge]] is associative, keeping first-seen order). */
+  def routedStats(df: DataFrame, col: String, typed: Boolean = false): RouteStats = {
+    val column = df.select(df(col))
+    require(column.schema.head.dataType == StringType,
+      s"schema inference reads a string column; $col is ${column.schema.head.dataType.sql}")
+    val parts = column.queryExecution.toRdd.mapPartitions { rows =>
+      var acc: JType = JNull
+      var nValid, nInvalid = 0L
+      rows.foreach { r =>
+        val next = JsonShape.fold(acc, r.getUTF8String(0), typed)
+        if (next eq JTop) nInvalid += 1 else { acc = next; nValid += 1 }
+      }
+      Iterator.single((new JTypeCodec().encode(acc), nValid, nInvalid))
+    }.collect()
+    val codec = new JTypeCodec
+    parts.foldLeft(RouteStats(JNull, 0L, 0L)) { case (s, (bytes, v, i)) =>
+      RouteStats(JType.merge(s.shape, codec.decode(bytes), typed), s.nValid + v, s.nInvalid + i)
+    }
   }
 
   /** Post-aggregation attribute-map normalization ([[JType.mapify]])
@@ -77,11 +108,4 @@ object SchemaInference {
     StructType(s.fields.map(f => f.copy(dataType =
       JType.toDataType(
         JType.mapify(JType.fromDataType(f.dataType), threshold, typed)))))
-
-  def schemaFromJson(json: String): Option[StructType] =
-    if (json == null || json == InvalidSchema) None
-    else DataType.fromJson(json) match {
-      case s: StructType => Some(s)
-      case _             => None
-    }
 }

@@ -1,11 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.Fns
-import graft.schema.{Ddl, SchemaInference}
+import graft.schema.{Ddl, RouteStats, SchemaInference}
 
 /** NDJSON ingestion with valid/invalid routing — the reference's source +
   * routing surface (SURVEY.md §2 ops #1-3, #11) as two lazily-derived
@@ -13,9 +13,9 @@ import graft.schema.{Ddl, SchemaInference}
   *
   * Scale notes: the validity predicate is a codegen'd native expression
   * evaluated inside the scan's whole-stage-codegen span; no row is ever
-  * collected to the driver — inference moves only O(schema) aggregation
-  * buffers (see [[graft.schema.SchemaAgg]]). The reference materializes the
-  * whole content on one thread and reads it twice
+  * collected — inference moves only one O(schema) buffer per partition
+  * (see [[graft.schema.SchemaInference.routedStats]]). The reference
+  * materializes the whole content on one thread and reads it twice
   * (`HiveSchemaGenerator.scala:75,98,116`); we read once and route in the
   * same pass.
   */
@@ -41,27 +41,19 @@ object JsonIngest {
     route(readLines(spark, path))
 
   /** End-to-end reference pipeline (SURVEY.md §3.1 Spark trace): read →
-    * route → infer → render DDL. Returns (ddl, routed); None when no line
-    * was a valid JSON object. */
+    * route → infer (skipping invalid lines itself) → render DDL. Returns
+    * (ddl, routed); None when no line was a valid JSON object. */
   def inferDdl(
       spark: SparkSession,
       path: String,
       tableName: String,
       location: String,
       typed: Boolean = false): (Option[String], Routed) = {
-    val routed = routeNdjson(spark, path)
-    val ddl = inferDdlFromLines(
-      routed.valid.select("value").as(Encoders.STRING), tableName, location, typed)
-    (ddl, routed)
-  }
-
-  def inferDdlFromLines(
-      lines: Dataset[String],
-      tableName: String,
-      location: String,
-      typed: Boolean = false): Option[String] =
-    SchemaInference.infer(lines, typed)
+    val lines = readLines(spark, path)
+    val ddl = inferRoutedStats(lines, "value", typed).schema
       .map(Ddl.createExternalTable(_, tableName, location))
+    (ddl, route(lines))
+  }
 
   /** Schema inference over a JSON-string column of an arbitrary DataFrame
     * (e.g. `events.props` in the test data). `mapThreshold` applies the
@@ -70,24 +62,16 @@ object JsonIngest {
     * ([[graft.schema.JType.mapify]]). */
   def inferColumnSchema(
       df: DataFrame, col: String, typed: Boolean = false,
-      mapThreshold: Option[Int] = None): Option[StructType] = {
-    val json = df.select(
-        SchemaInference.infer_schema_agg(df(col), typed).as("schema_json"))
-      .as(Encoders.STRING).head()
-    SchemaInference.schemaFromJson(json)
-      .map(s => mapThreshold.fold(s)(th =>
-        SchemaInference.mapifySchema(s, th, typed)))
-  }
+      mapThreshold: Option[Int] = None): Option[StructType] =
+    SchemaInference.infer(df.select(df(col)).as(Encoders.STRING), typed)
+      .map(s => mapThreshold.fold(s)(th => SchemaInference.mapifySchema(s, th, typed)))
 
   /** The whole reference pipeline — validate, route-count, infer — in ONE
-    * scan and ONE parse per line (the reference reads twice,
+    * scan and ONE parse per line, as one stage with no shuffle
+    * ([[SchemaInference.routedStats]]; the reference reads twice,
     * `HiveSchemaGenerator.scala:75,98`; SURVEY.md §4 flags it). */
-  def inferRoutedStats(
-      df: DataFrame, col: String, typed: Boolean = false): graft.schema.RouteStats =
-    df.select(graft.schema.RouteAgg.route_infer_agg(df(col), typed).as("r"))
-      .select("r.*")
-      .as(Encoders.product[graft.schema.RouteStats])
-      .head()
+  def inferRoutedStats(df: DataFrame, col: String, typed: Boolean = false): RouteStats =
+    SchemaInference.routedStats(df, col, typed)
 
   /** One-scan routing to two materialized sinks: rows are written under
     * `_graft_valid=true|false` partitions of `outPath`; the validity

@@ -11,12 +11,12 @@ import graft.sources.JsonIngest
 /** Structured-Streaming schema inference — the reference's incremental
   * per-record fold (`CreateHQL.scala:14-20`) lifted to event streams.
   *
-  * Each micro-batch runs the single-pass [[graft.schema.RouteAgg]]
-  * aggregation (distributed, O(schema) per partition); the per-batch
-  * schema is merged into a driver-held evolving [[JType]] — O(schema)
-  * state, exactly like the reference's accumulator, but fed by
-  * cluster-parallel batches — and the DDL is re-emitted only when the
-  * merged schema actually changes.
+  * Each micro-batch runs the single-pass partition fold
+  * ([[graft.sources.JsonIngest.inferRoutedStats]]); the batch's lattice
+  * value is merged into the evolving [[JType]] of [[SchemaEvolution]] —
+  * O(schema) state, exactly like the reference's accumulator — and the
+  * DDL is re-emitted only when the merged schema's Spark form changes.
+  * As the state is never lowered, batch cuts do not change the schema.
   */
 object InferStream {
 
@@ -27,10 +27,10 @@ object InferStream {
       case s: StructType if s.nonEmpty => Some(s)
       case _                           => None
     }
-    /** Merge a batch schema; true iff the merged schema changed. */
-    def merge(batch: StructType): Boolean = synchronized {
-      val next = JType.merge(current, JType.fromDataType(batch), typed)
-      val changed = next != current
+    /** Merge a batch's lattice value; true iff the lowered schema changed. */
+    def merge(batch: JType): Boolean = synchronized {
+      val next = JType.merge(current, batch, typed)
+      val changed = next != current && JType.toDataType(next) != JType.toDataType(current)
       current = next
       changed
     }
@@ -58,12 +58,9 @@ object InferStream {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val stats = JsonIngest.inferRoutedStats(batch, "value", typed)
-        stats.schema.foreach { s =>
-          if (evo.merge(s)) {
-            evo.schema.foreach(merged =>
-              onDdl(Ddl.createExternalTable(merged, tableName, location)))
-          }
+        if (evo.merge(JsonIngest.inferRoutedStats(batch, "value", typed).shape)) {
+          evo.schema.foreach(merged =>
+            onDdl(Ddl.createExternalTable(merged, tableName, location)))
         }
       }
       .start()

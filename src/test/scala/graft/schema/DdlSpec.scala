@@ -119,5 +119,20 @@ class DdlSpec extends AnyFunSpec {
       assert(rows.map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("x", 1L)))
       spark.sql("DROP TABLE graft_ddl_spec")
     }
+    it("registers through the Hive metastore with hiveMode = true") {
+      val hs = graft.catalog.HiveMode.session(graft.TestSpark.spark)
+      val dir = java.nio.file.Files.createTempDirectory("graft-ddl-hive").toString
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dir/d.json"), """{"a": "x", "n": 1}""" + "\n")
+      val schema = StructType(Seq(
+        StructField("a", StringType), StructField("n", LongType)))
+      val hiveDdl = graft.catalog.Register
+        .externalJsonTable(hs, schema, "graft_ddl_spec_hive", dir, hiveMode = true)
+      // The rendered reference DDL still names the hcatalog serde.
+      assert(hiveDdl == Ddl.createExternalTable(schema, "graft_ddl_spec_hive", dir))
+      assert(hs.table("graft_ddl_spec_hive").schema.map(f => f.name -> f.dataType) ==
+        Seq("a" -> StringType, "n" -> LongType))
+      hs.sql("DROP TABLE graft_ddl_spec_hive")
+    }
   }
 }

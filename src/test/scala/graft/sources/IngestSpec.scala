@@ -1,15 +1,17 @@
 package graft.sources
 
 import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funspec.AnyFunSpec
 
 import graft.TestSpark
-import graft.schema.SchemaInference
+import graft.schema.{JNull, JType, JsonShape, SchemaInference}
 
 /** End-to-end ingestion tests mirroring the reference's two black-box
   * tests (`HiveSchemaGeneratorSpec.scala:37-74`: happy path on a 6-line
   * nested NDJSON fixture, failure path on "ThisIsNotJSON", content
-  * preservation) plus the single-pass RouteAgg and routeWrite paths.
+  * preservation) plus the single-pass inferRoutedStats and routeWrite
+  * paths.
   */
 class IngestSpec extends AnyFunSpec {
 
@@ -69,7 +71,7 @@ class IngestSpec extends AnyFunSpec {
     }
   }
 
-  describe("single-pass RouteAgg") {
+  describe("single-pass inferRoutedStats") {
     it("computes routing counts AND schema in one aggregation") {
       val path = writeNdjson(goodLines ++ Seq("ThisIsNotJSON", "[1]"))
       val lines = JsonIngest.readLines(spark, path)
@@ -97,6 +99,46 @@ class IngestSpec extends AnyFunSpec {
       assert(stats.schema.get.fieldNames.contains("deep"))
       val routed = JsonIngest.route(lines)
       assert(routed.valid.count() == 7 && routed.invalid.count() == 3)
+    }
+  }
+
+  describe("partition fold merged in partition order") {
+    import spark.implicits._
+    def rows(lines: Seq[String], n: Int) = spark.sparkContext.parallelize(lines, n).toDF("value")
+    def seqFold(lines: Seq[String]): Option[StructType] =
+      Some(JType.toDataType(lines.foldLeft(JNull: JType)(JsonShape.fold(_, _, typed = false)))
+        .asInstanceOf[StructType])
+
+    it("equals the sequential fold, field order at every level included, " +
+       "at 1, 2 and 8 partitions") {
+      // Keys at every level first appear in different partitions.
+      val lines = (0 until 48).map { i =>
+        s"""{"k${(i * 7) % 48}":1,"n":{"x${(i * 5) % 11}":[{"y${i % 7}":1,"z${i % 3}":null}]},""" +
+          s""""a${i % 13}":[]}"""
+      }
+      val want = seqFold(lines)
+      for (n <- Seq(1, 2, 8)) {
+        val df = rows(lines, n)
+        assert(df.rdd.getNumPartitions == n)
+        val stats = JsonIngest.inferRoutedStats(df, "value")
+        assert(stats.nValid == 48 && stats.nInvalid == 0)
+        assert(stats.schema == want, s"$n partitions")
+        assert(SchemaInference.infer(df.as[String]) == want, s"$n partitions")
+      }
+    }
+    it("counts a null row as invalid, which SchemaInference.infer rejects") {
+      val valid = Seq("""{"b":{"c":null}}""", """{"a":1,"b":{"d":[1]}}""")
+      val df = rows(Seq(valid(0), null, "nope", valid(1)), 2)
+      val stats = JsonIngest.inferRoutedStats(df, "value")
+      assert(stats.nValid == 2 && stats.nInvalid == 2)
+      assert(stats.schema == seqFold(valid))
+      assert(SchemaInference.infer(df.as[String]).isEmpty)
+    }
+    it("yields no schema for an all-invalid input") {
+      val df = rows(Seq("nope", null, "[1]"), 2)
+      val stats = JsonIngest.inferRoutedStats(df, "value")
+      assert(stats.nValid == 0 && stats.nInvalid == 3 && stats.schema.isEmpty)
+      assert(SchemaInference.infer(df.as[String]).isEmpty)
     }
   }
 

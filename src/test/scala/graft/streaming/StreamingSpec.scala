@@ -49,6 +49,25 @@ class StreamingSpec extends AnyFunSpec {
       q3.awaitTermination()
       assert(ddls.size == 2)
     }
+    it("gives the schema of the whole input however batches cut it") {
+      val in = Files.createTempDirectory("graft-stream-cut-in").toString
+      val cp = Files.createTempDirectory("graft-stream-cut-cp").toString
+      val ddls = scala.collection.mutable.ArrayBuffer.empty[String]
+      val evo = new InferStream.SchemaEvolution()
+      val lines = Seq("""{"a": null, "b": null}""", """{"a": [1]}""", """{"b": "x"}""")
+      lines.zipWithIndex.foreach { case (line, i) =>
+        Files.writeString(java.nio.file.Paths.get(s"$in/b$i.ndjson"), line + "\n")
+        InferStream.run(spark, in, cp, "t_stream_cut", "/loc",
+          ddl => ddls.synchronized { ddls += ddl },
+          trigger = Trigger.AvailableNow(), state = Some(evo)).awaitTermination()
+      }
+      val whole = graft.sources.JsonIngest.inferRoutedStats(lines.toDF("value"), "value").schema
+      assert(whole.map(_.simpleString).contains("struct<a:array<string>,b:string>"))
+      assert(evo.schema == whole)
+      // A null-only field turning STRING changes no column: no third DDL.
+      assert(ddls.size == 2)
+      assert(ddls(1).contains("`a` ARRAY"))
+    }
   }
 
   describe("InferStream.windowedCounts (watermark + tumbling window)") {
