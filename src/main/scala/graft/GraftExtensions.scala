@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-import graft.functions.{DotProduct, ExplodeShingles, JsonIsObject, JsonIsValid, MinHashSigs, SqDist}
+import graft.functions.{DotProduct, ExplodeShingles, JsonIsObject, JsonIsValid, MinHashSigs, NfcNormalize, SqDist}
 
 /** Session-extension packaging of graft's native functions, so a user
   * can enable the whole surface with
@@ -31,6 +31,9 @@ object GraftExtensions {
     ("json_is_object",
       info("json_is_object", "json_is_object(str) - true iff str is a JSON object"),
       es => { requireArity("json_is_object", es, 1); JsonIsObject(es.head) }),
+    ("nfc_normalize",
+      info("nfc_normalize", "nfc_normalize(str) - Unicode NFC normalization of str"),
+      es => { requireArity("nfc_normalize", es, 1); NfcNormalize(es.head) }),
     ("minhash_sigs",
       info("minhash_sigs", "minhash_sigs(text[, perms]) - integer MinHash signatures of 3-word shingles"),
       es => { requireArityIn("minhash_sigs", es, 1, 2)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -58,7 +58,8 @@ case class JsonIsObject(child: Expression)
     copy(child = newChild)
 }
 
-/** Column-API and SQL registration for graft's native functions. */
+/** Column API for graft's native functions; SQL registration is
+  * [[graft.GraftExtensions]]. */
 object Fns {
   def json_is_valid(c: Column): Column =
     GraftBridge.column(JsonIsValid(GraftBridge.expression(c)))
@@ -66,10 +67,4 @@ object Fns {
     GraftBridge.column(JsonIsObject(GraftBridge.expression(c)))
   def nfc_normalize(c: Column): Column =
     GraftBridge.column(NfcNormalize(GraftBridge.expression(c)))
-
-  def register(spark: SparkSession): Unit = {
-    GraftBridge.registerFunction(spark, "json_is_valid", es => JsonIsValid(es.head))
-    GraftBridge.registerFunction(spark, "json_is_object", es => JsonIsObject(es.head))
-    GraftBridge.registerFunction(spark, "nfc_normalize", es => NfcNormalize(es.head))
-  }
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.functions.Fns
-import graft.schema.Ddl
+import graft.schema.{Ddl, JType}
 import graft.sources.JsonIngest
 import Tables.{events, t}
 
@@ -296,13 +296,13 @@ object Parity {
             "\"updatedAttributes\": {\"u"),
           col("user_id"), lit("\": \""), col("event_type"), lit("\"}}"))
           .as("payload"))
-        val structy = JsonIngest
-          .inferColumnSchema(j, "payload", typed = true)
+        val stats = JsonIngest.inferRoutedStats(j, "payload", typed = true)
+        val structy = stats.schema.filter(_ => stats.nInvalid == 0)
           .getOrElse(sys.error("p10: no schema inferred"))
         val nKeys = structy("updatedAttributes").dataType
           .asInstanceOf[org.apache.spark.sql.types.StructType].fields.length
-        val mapped = graft.schema.SchemaInference
-          .mapifySchema(structy, threshold = 32, typed = true)
+        val mapped = JType.toDataType(JType.mapify(stats.shape, threshold = 32, typed = true))
+          .asInstanceOf[org.apache.spark.sql.types.StructType]
         val ddl = Ddl.createExternalTable(
           mapped, "events_attrs", "/tmp/events_attrs")
         import s.implicits._

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.streaming.InferStream
 import Tables.events
@@ -450,24 +450,22 @@ object StreamingQ {
         // change across micro-batches). The final schema is the MERGE
         // of all of them — schema evolution is monotone in the JType
         // lattice — so fold them; max()/last() would pick an arbitrary
-        // string, not the widest schema.
+        // update, not the widest schema.
         // Top-level fields are emitted SORTED BY NAME: collect_list order
         // is nondeterministic across micro-batch interleavings, so
         // first-seen order is not reproducible here (unlike batch p06),
         // and the SQL oracle below derives the same sorted key set from
         // the data itself.
-        val mergeSchemas = udf { (xs: Seq[String]) =>
-          val merged = xs
-            .map(j => graft.schema.JType.fromDataType(DataType.fromJson(j)))
+        val mergeSchemas = udf { (xs: Seq[Array[Byte]]) =>
+          val codec = new graft.schema.JTypeCodec
+          val merged = xs.map(codec.decode)
             .foldLeft(graft.schema.JNull: graft.schema.JType)(
               graft.schema.JType.merge(_, _, false))
-          graft.schema.JType.toDataType(merged) match {
-            case st: StructType => StructType(st.fields.sortBy(_.name)).json
-            case _              => graft.schema.SchemaInference.InvalidSchema
-          }
+          val st = graft.schema.JType.toDataType(merged).asInstanceOf[StructType]
+          StructType(st.fields.sortBy(_.name)).json
         }
         out.groupBy(col("key").as("event_type"))
-          .agg(mergeSchemas(collect_list("schemaJson")).as("schema_json"))
+          .agg(mergeSchemas(collect_list("shape")).as("schema_json"))
           .orderBy("event_type")
       },
       // Oracle derived from the data (not a hardcoded schema constant):

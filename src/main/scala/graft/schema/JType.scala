@@ -23,8 +23,8 @@ package graft.schema
   *    hash-map order (`CreateHQL.scala:58`);
   *  - arrays merge '''all''' elements, not just the head
   *    (`CreateHQL.scala:55,72-73` drops fields present only in 2nd+ elements);
-  *  - a top-level non-object record poisons the result to [[JTop]] so callers
-  *    can route it to the invalid side instead of emitting `ERROR` DDL
+  *  - a top-level non-object record shapes to [[JTop]], so the inference
+  *    folds count it invalid and skip it instead of emitting `ERROR` DDL
   *    (`CreateHQL.scala:91`).
   *
   * The merge is associative and commutative-up-to-field-order, so it
@@ -62,12 +62,12 @@ final case class JStruct(fields: Vector[(String, JType)]) extends JType {
 }
 /** String-keyed map — never produced by raw inference (JSON objects
   * parse as [[JStruct]], like the reference, `CreateHQL.scala:57-61`);
-  * introduced by the post-aggregation [[JType.mapify]] normalization
-  * for attribute-map-shaped structs, or lifted from a user-declared
-  * Spark `MapType`. */
+  * introduced only by the post-aggregation [[JType.mapify]]
+  * normalization for attribute-map-shaped structs. */
 final case class JMap(value: JType) extends JType
 /** Poison: a top-level record was not a JSON object (or structurally
-  * unusable); the whole inference result is invalid. */
+  * unusable). [[JsonShape.fold]] returns it for such a line; the
+  * inference folds skip that line ([[ShapeFold]]). */
 case object JTop extends JType
 
 object JType {
@@ -157,17 +157,11 @@ object JType {
       StructType(fs.map { case (k, v) => StructField(k, toDataType(v)) })
   }
 
-  /** Lift a Spark SQL type back into the lattice (for merging an inferred
-    * schema with a user-declared one, and for streaming schema evolution). */
-  def fromDataType(dt: DataType): JType = dt match {
-    case NullType                => JNull
-    case LongType | IntegerType | ShortType | ByteType => JLong
-    case DoubleType | FloatType | _: DecimalType       => JDouble
-    case BooleanType             => JBool
-    case ArrayType(e, _)         => JArr(fromDataType(e))
-    case MapType(_, v, _)        => JMap(fromDataType(v))
-    case StructType(fs)          =>
-      JStruct(fs.iterator.map(f => f.name -> fromDataType(f.dataType)).toVector)
-    case _                       => JStr
-  }
+  /** True iff `after`'s Spark form differs from `before`'s: the change
+    * test of every schema an inference fold emits as it evolves
+    * ([[graft.streaming.InferStream.SchemaEvolution]],
+    * [[graft.streaming.PerKeySchema]]). A `JNull` → `JStr` step changes
+    * the lattice value but not the Spark form. */
+  def loweredChanged(before: JType, after: JType): Boolean =
+    after != before && toDataType(after) != toDataType(before)
 }

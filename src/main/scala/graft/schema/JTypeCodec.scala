@@ -7,13 +7,16 @@ import scala.reflect.classTag
 import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoders, Codec, ExpressionEncoder}
 
-/** Compact binary codec for the [[JType]] aggregation buffer.
+/** Compact binary codec for a [[JType]] wherever it must be stored.
   *
   * [[SchemaAgg]]'s buffer crosses the wire on every partial→final merge
   * and is re-serialized whenever the object-hash aggregate spills (the
   * per-key inference path `p06_group_schemas` can hold millions of group
-  * buffers at 100 TB), and each partition of [[SchemaInference.routedStats]]
-  * returns its schema in this form. Generic kryo pays for class-name
+  * buffers at 100 TB), each partition of [[SchemaInference.routedStats]]
+  * returns its schema in this form, and
+  * [[graft.streaming.PerKeySchema]] keeps each key's schema in the state
+  * store in it. The bytes outlive a run there, so the format below is
+  * fixed (JTypeSpec pins it). Generic kryo pays for class-name
   * metadata and reflective dispatch on every such event; this codec
   * writes a preorder tag-byte tree — a few bytes per schema node,
   * allocation-free dispatch — via Spark 4's public

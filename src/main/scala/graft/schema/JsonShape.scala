@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * constraints cap nesting at [[MaxDepth]] objects/arrays. A deeper line
   * fails to parse, so it is invalid everywhere at once: [[of]], [[fold]]
   * and the validity predicates. The cap keeps each inferred schema within
-  * what the DataType-JSON round trip, [[JTypeCodec]] and the recursive
+  * what [[JTypeCodec]], the lowering to Spark types and the recursive
   * walks here can carry; without it one deep line failed a whole job.
   */
 object JsonShape {
@@ -83,8 +83,9 @@ object JsonShape {
   }
 
   /** Shape for inference over NDJSON rows: a record whose top level is not
-    * an object poisons the aggregate to [[JTop]] (the reference silently
-    * emits `ERROR` DDL instead — `CreateHQL.scala:91`, SURVEY.md §1.2). */
+    * an object is [[JTop]], which the inference folds skip as invalid
+    * ([[ShapeFold]]; the reference silently emits `ERROR` DDL instead —
+    * `CreateHQL.scala:91`, SURVEY.md §1.2). */
   def ofRecord(json: String, typed: Boolean): JType = of(json, typed) match {
     case Some(s: JStruct) => s
     case Some(_)          => JTop

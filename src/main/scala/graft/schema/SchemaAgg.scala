@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Spar
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-group schema inference (SQL, `groupBy`) as a typed [[Aggregator]].
   *
@@ -15,14 +16,11 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * O(schema) buffer, and only the tiny per-partition schemas cross the
   * wire — never rows.
   *
-  * Each row folds in through [[JsonShape.fold]]. Subsumption contract: a
-  * row leaves the buffer the same object (`eq`) iff merging its shape
-  * would not change it; such a row builds no shape and runs no merge.
-  *
-  * Rows that are not valid single JSON objects, including rows nested
-  * deeper than [[JsonShape.MaxDepth]], poison the result to [[JTop]];
-  * pre-filter with [[graft.functions.Fns.json_is_object]] to route them
-  * to an invalid side instead (SURVEY.md §2 op #3/#11).
+  * Each row folds in through [[ShapeFold]]: a row leaves the buffer the
+  * same object (`eq`) iff merging its shape would not change it, and a
+  * row that is not a valid single JSON object (null, or nested deeper
+  * than [[JsonShape.MaxDepth]], included) is skipped. A group with no
+  * valid row has no schema: its result is SQL `NULL`.
   *
   * @param typed false = the reference's STRING-only Hive lattice
   *              (`CreateHQL.scala:81`); true = LONG/DOUBLE/BOOLEAN/STRING.
@@ -30,15 +28,31 @@ import org.apache.spark.sql.types.{StringType, StructType}
 final class SchemaAgg(typed: Boolean) extends Aggregator[String, JType, String] {
   override def zero: JType = JNull
   override def reduce(b: JType, line: String): JType =
-    JsonShape.fold(b, line, typed)
+    new ShapeFold(typed, b).add(line).shape
   override def merge(a: JType, b: JType): JType = JType.merge(a, b, typed)
-  /** Lossless Spark DataType JSON (parse back with `DataType.fromJson`). */
-  override def finish(r: JType): String = JType.toDataType(r) match {
-    case s: StructType => s.json
-    case _             => SchemaInference.InvalidSchema
+  /** The group's schema as Spark DataType JSON; null when no row was valid. */
+  override def finish(r: JType): String = r match {
+    case s: JStruct => JType.toDataType(s).json
+    case _          => null
   }
   override def bufferEncoder: Encoder[JType] = JTypeCodec.encoder
   override def outputEncoder: Encoder[String] = Encoders.STRING
+}
+
+/** The one rule every per-row inference fold keeps for a bad line: a line
+  * [[JsonShape.fold]] finds invalid (not exactly one JSON object, nested
+  * past [[JsonShape.MaxDepth]], or null) is counted and skipped, so it
+  * never poisons `shape`; every other line widens it. Used by
+  * [[SchemaInference.routedStats]], [[SchemaAgg]] and
+  * [[graft.streaming.PerKeySchema]]. */
+final class ShapeFold(typed: Boolean, var shape: JType = JNull) {
+  var nValid, nInvalid = 0L
+  def add(line: String): this.type = step(JsonShape.fold(shape, line, typed))
+  def add(line: UTF8String): this.type = step(JsonShape.fold(shape, line, typed))
+  private def step(next: JType): this.type = {
+    if (next eq JTop) nInvalid += 1 else { shape = next; nValid += 1 }
+    this
+  }
 }
 
 /** [[SchemaInference.routedStats]]'s result: the valid rows' merged
@@ -51,14 +65,9 @@ final case class RouteStats(shape: JType, nValid: Long, nInvalid: Long) {
 
 object SchemaInference {
 
-  /** Sentinel returned when the merged top level was not a JSON object —
-    * the caller must treat the input as unroutable (the reference instead
-    * renders literal `ERROR` into the DDL, `CreateHQL.scala:91`). */
-  val InvalidSchema = "!INVALID"
-
   /** Column-level inference aggregate: `infer_schema_agg(jsonCol)` →
-    * DataType-JSON string. Usable in `groupBy(...).agg(...)` for per-key
-    * schemas. */
+    * DataType-JSON string, NULL for a group with no valid row. Usable in
+    * `groupBy(...).agg(...)` for per-key schemas. */
   def infer_schema_agg(col: Column, typed: Boolean = false): Column =
     functions.udaf(new SchemaAgg(typed)).apply(col)
 
@@ -76,7 +85,7 @@ object SchemaInference {
   }
 
   /** Routing + schema inference in ONE pass over `col`, a string column.
-    * Each partition folds its rows' UTF-8 bytes through [[JsonShape.fold]]:
+    * Each partition folds its rows' UTF-8 bytes through [[ShapeFold]]:
     * valid JSON objects widen its schema, any other row (null included)
     * counts invalid. The partitions' [[JTypeCodec]] buffers are collected
     * and merged in partition-index order, so the job has one stage and no
@@ -87,25 +96,13 @@ object SchemaInference {
     require(column.schema.head.dataType == StringType,
       s"schema inference reads a string column; $col is ${column.schema.head.dataType.sql}")
     val parts = column.queryExecution.toRdd.mapPartitions { rows =>
-      var acc: JType = JNull
-      var nValid, nInvalid = 0L
-      rows.foreach { r =>
-        val next = JsonShape.fold(acc, r.getUTF8String(0), typed)
-        if (next eq JTop) nInvalid += 1 else { acc = next; nValid += 1 }
-      }
-      Iterator.single((new JTypeCodec().encode(acc), nValid, nInvalid))
+      val f = new ShapeFold(typed)
+      rows.foreach(r => f.add(r.getUTF8String(0)))
+      Iterator.single((new JTypeCodec().encode(f.shape), f.nValid, f.nInvalid))
     }.collect()
     val codec = new JTypeCodec
     parts.foldLeft(RouteStats(JNull, 0L, 0L)) { case (s, (bytes, v, i)) =>
       RouteStats(JType.merge(s.shape, codec.decode(bytes), typed), s.nValid + v, s.nInvalid + i)
     }
   }
-
-  /** Post-aggregation attribute-map normalization ([[JType.mapify]])
-    * applied per top-level column (the table's own column set is never
-    * collapsed — only nested structs can become maps). */
-  def mapifySchema(s: StructType, threshold: Int, typed: Boolean): StructType =
-    StructType(s.fields.map(f => f.copy(dataType =
-      JType.toDataType(
-        JType.mapify(JType.fromDataType(f.dataType), threshold, typed)))))
 }

@@ -56,15 +56,10 @@ object JsonIngest {
   }
 
   /** Schema inference over a JSON-string column of an arbitrary DataFrame
-    * (e.g. `events.props` in the test data). `mapThreshold` applies the
-    * post-aggregation attribute-map normalization: nested structs with at
-    * least that many uniformly-typed keys collapse to `MAP<STRING, τ>`
-    * ([[graft.schema.JType.mapify]]). */
-  def inferColumnSchema(
-      df: DataFrame, col: String, typed: Boolean = false,
-      mapThreshold: Option[Int] = None): Option[StructType] =
+    * (e.g. `events.props` in the test data). None unless every row, and at
+    * least one, is a valid JSON object ([[SchemaInference.infer]]). */
+  def inferColumnSchema(df: DataFrame, col: String, typed: Boolean = false): Option[StructType] =
     SchemaInference.infer(df.select(df(col)).as(Encoders.STRING), typed)
-      .map(s => mapThreshold.fold(s)(th => SchemaInference.mapifySchema(s, th, typed)))
 
   /** The whole reference pipeline — validate, route-count, infer — in ONE
     * scan and ONE parse per line, as one stage with no shuffle

@@ -30,7 +30,7 @@ object InferStream {
     /** Merge a batch's lattice value; true iff the lowered schema changed. */
     def merge(batch: JType): Boolean = synchronized {
       val next = JType.merge(current, batch, typed)
-      val changed = next != current && JType.toDataType(next) != JType.toDataType(current)
+      val changed = JType.loweredChanged(current, next)
       current = next
       changed
     }

@@ -2,40 +2,42 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
-import graft.schema.{JsonShape, JType}
+import graft.schema.{JNull, JType, JTypeCodec, ShapeFold}
+
+/** One key's schema update: the merged lattice value as [[JTypeCodec]]
+  * bytes, lowered to Spark types only on demand. */
+final case class KeyedSchema(key: String, shape: Array[Byte]) {
+  def schema: StructType =
+    JType.toDataType(new JTypeCodec().decode(shape)).asInstanceOf[StructType]
+}
 
 /** Per-key evolving schemas via `flatMapGroupsWithState` — the custom
   * stateful-streaming operator (SURVEY.md §2.2 streaming row): one
   * O(schema) state entry per key, an output row only when that key's
-  * merged schema changes. State is stored as Spark DataType JSON (string
-  * state → stable across restarts, no kryo in the state store).
+  * lowered schema changes. The state is the key's merged [[JType]] as
+  * [[JTypeCodec]] bytes, so batch cuts and restarts do not change the
+  * schema. Each row folds in through [[ShapeFold]]: an invalid line is
+  * skipped, and a key with no valid line has no state and emits nothing.
   */
-final case class KeyedSchema(key: String, schemaJson: String)
-
 object PerKeySchema {
 
   private def foldGroup(
       typed: Boolean)(
       key: String,
       rows: Iterator[(String, String)],
-      state: GroupState[String]): Iterator[KeyedSchema] = {
-    val prior: JType = state.getOption
-      .map(j => JType.fromDataType(DataType.fromJson(j)))
-      .getOrElse(graft.schema.JNull)
-    val merged = rows.foldLeft(prior) { case (acc, (_, json)) =>
-      JsonShape.fold(acc, json, typed)
-    }
-    JType.toDataType(merged) match {
-      case s: StructType =>
-        val sj = s.json
-        if (state.getOption.contains(sj)) Iterator.empty
-        else {
-          state.update(sj)
-          Iterator.single(KeyedSchema(key, sj))
-        }
-      case _ => Iterator.empty // poisoned or empty group: keep prior state
+      state: GroupState[Array[Byte]]): Iterator[KeyedSchema] = {
+    val codec = new JTypeCodec
+    val prior = state.getOption.fold(JNull: JType)(codec.decode)
+    val f = new ShapeFold(typed, prior)
+    rows.foreach { case (_, json) => f.add(json) }
+    if (f.shape == prior) Iterator.empty
+    else {
+      val bytes = codec.encode(f.shape)
+      state.update(bytes)
+      if (JType.loweredChanged(prior, f.shape)) Iterator.single(KeyedSchema(key, bytes))
+      else Iterator.empty
     }
   }
 
@@ -47,5 +49,5 @@ object PerKeySchema {
     pairs
       .groupByKey(_._1)(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        foldGroup(typed))(Encoders.STRING, Encoders.product[KeyedSchema])
+        foldGroup(typed))(Encoders.BINARY, Encoders.product[KeyedSchema])
 }

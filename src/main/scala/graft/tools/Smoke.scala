@@ -21,7 +21,6 @@ object Smoke {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Fns.register(spark)
     SchemaInference.register(spark)
     graft.GraftExtensions.install(spark)
     println("[smoke] GraftExtensions SQL surface:")

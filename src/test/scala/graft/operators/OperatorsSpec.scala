@@ -645,6 +645,14 @@ class OperatorsSpec extends AnyFunSpec {
       assert(r.getInt(2) == 4 && r.getInt(3) == 4)
       assert(r.getDouble(4) == 11.0)
     }
+    it("rejects a wrong argument count for every unary function") {
+      graft.GraftExtensions.install(spark)
+      val e = intercept[Exception](
+        spark.sql("SELECT json_is_object('{}', 'x')").collect())
+      assert(e.getMessage.contains("json_is_object requires exactly 1 arguments, got 2"))
+      val e2 = intercept[Exception](spark.sql("SELECT nfc_normalize()").collect())
+      assert(e2.getMessage.contains("nfc_normalize requires exactly 1 arguments, got 0"))
+    }
     it("rejects out-of-range perms at analysis time") {
       graft.GraftExtensions.install(spark)
       val e = intercept[Exception](
@@ -1963,7 +1971,7 @@ class OperatorsSpec extends AnyFunSpec {
         .foreach(r => assert(r.getString(0) == r.getString(1)))
     }
     it("registers in SQL and propagates null") {
-      graft.functions.Fns.register(spark)
+      graft.GraftExtensions.install(spark)
       val r = spark.sql(
         "SELECT nfc_normalize('a\u0301') AS n, " +
           "nfc_normalize(CAST(NULL AS STRING)) AS z").head()

@@ -183,6 +183,21 @@ class IngestSpec extends AnyFunSpec {
     }
   }
 
+  describe("infer_schema_agg (per-group SchemaAgg)") {
+    it("skips an invalid line; a group with no valid line gets NULL") {
+      import spark.implicits._
+      val pairs = Seq(
+        ("k", """{"x":1}"""), ("k", "nope"),
+        ("bad", "nope"), ("bad", "[1]"), ("bad", null)).toDF("k", "v")
+      val out = pairs.groupBy("k")
+        .agg(SchemaInference.infer_schema_agg(pairs("v")).as("s"))
+        .as[(String, String)].collect().toMap
+      assert(out == Map(
+        "k" -> StructType.fromDDL("x STRING").json,
+        "bad" -> null))
+    }
+  }
+
   describe("SchemaInference.infer (whole-dataset fold)") {
     it("matches reference lattice on mixed records") {
       import spark.implicits._

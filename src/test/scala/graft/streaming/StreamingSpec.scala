@@ -219,10 +219,108 @@ class StreamingSpec extends AnyFunSpec {
         ("k1", """{"b": 2}"""),
         ("k2", """{"x": true}""")).toDS()
       val out = PerKeySchema.evolve(pairs).collect()
-        .map(ks => ks.key -> ks.schemaJson).toMap
+        .map(ks => ks.key -> ks.schema.json).toMap
       assert(out.keySet == Set("k1", "k2"))
       assert(out("k1").contains("\"a\"") && out("k1").contains("\"b\""))
       assert(out("k2").contains("\"x\""))
+    }
+    it("skips an invalid line instead of losing the key's batch") {
+      val pairs = Seq(
+        ("k", """{"x":1}"""), ("k", "nope"),
+        ("bad", "nope"), ("bad", "[1]"), ("bad", null)).toDS()
+      val out = PerKeySchema.evolve(pairs).collect()
+        .map(ks => ks.key -> ks.schema.simpleString).toMap
+      assert(out == Map("k" -> "struct<x:string>"))
+    }
+  }
+
+  describe("batch-cut independence (PerKeySchema.evolve, InferStream.SchemaEvolution)") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import graft.schema.{JNull, JStruct, JType, JsonShape}
+    import graft.sources.JsonIngest
+
+    /** Struct fields sorted by name at every level: batch cuts may change
+      * first-seen order, never the fields or their types. */
+    def canon(t: DataType): DataType = t match {
+      case s: StructType =>
+        StructType(s.fields.sortBy(_.name).map(f => StructField(f.name, canon(f.dataType))))
+      case ArrayType(e, n) => ArrayType(canon(e), n)
+      case other           => other
+    }
+    /** Each key's whole-input fold over its valid lines, lowered. */
+    def wholeFold(pairs: Seq[(String, String)]): Map[String, DataType] =
+      pairs.filter { case (_, l) => JsonShape.of(l, typed = false).exists(_.isInstanceOf[JStruct]) }
+        .groupBy(_._1).map { case (k, kls) =>
+          k -> canon(JType.toDataType(
+            kls.map(_._2).foldLeft(JNull: JType)(JsonShape.fold(_, _, typed = false))))
+        }
+    /** Streams `batches` through `PerKeySchema.evolve`, one micro-batch
+      * each; every key's updates in order, lowered. */
+    def evolved(batches: Seq[Seq[(String, String)]]): Map[String, Seq[DataType]] = {
+      val in = MemoryStream[(String, String)](spark)
+      val seen = scala.collection.mutable.ArrayBuffer.empty[KeyedSchema]
+      val q = PerKeySchema.evolve(in.toDS()).writeStream
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[KeyedSchema], _: Long) =>
+          seen.synchronized { seen ++= b.collect() }; ()
+        }
+        .outputMode("update")
+        .option("checkpointLocation", Files.createTempDirectory("graft-cut-cp").toString)
+        .start()
+      try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      seen.toSeq.groupBy(_.key).map { case (k, us) => k -> us.map(u => canon(u.schema)) }
+    }
+    /** Feeds each batch's per-key `inferRoutedStats` shape to one
+      * `SchemaEvolution` per key. */
+    def streamed(batches: Seq[Seq[(String, String)]]): Map[String, DataType] = {
+      val evos = scala.collection.mutable.Map.empty[String, InferStream.SchemaEvolution]
+      batches.foreach(_.groupBy(_._1).foreach { case (k, kls) =>
+        evos.getOrElseUpdate(k, new InferStream.SchemaEvolution())
+          .merge(JsonIngest.inferRoutedStats(kls.map(_._2).toDF("value"), "value").shape)
+      })
+      evos.flatMap { case (k, evo) => evo.schema.map(s => k -> canon(s)) }.toMap
+    }
+    /** The last update per key is the whole-input fold, and a key emits an
+      * update only when its lowered schema changes. */
+    def check(batches: Seq[Seq[(String, String)]]): Boolean = {
+      val want = wholeFold(batches.flatten)
+      val updates = evolved(batches)
+      updates.values.forall(us => us.zip(us.drop(1)).forall { case (a, b) => a != b }) &&
+        updates.map { case (k, us) => k -> us.last } == want && streamed(batches) == want
+    }
+
+    it("a null-only field widened in a later batch keeps its widest type") {
+      val batches = Seq("""{"a":null,"b":null}""", """{"a":[1]}""", """{"b":"x"}""")
+        .map(l => Seq("k" -> l))
+      val want = canon(StructType.fromDDL("a ARRAY<STRING>, b STRING"))
+      assert(wholeFold(batches.flatten) == Map("k" -> want))
+      // The third batch turns `b` from null-only to STRING: no new update.
+      assert(evolved(batches) == Map("k" -> Seq(
+        canon(StructType.fromDDL("a STRING, b STRING")), want)))
+      assert(streamed(batches) == Map("k" -> want))
+    }
+
+    // Values that start null-only and later widen to arrays or structs,
+    // conflicting scalars and containers, and lines that are invalid.
+    val valueGen: Gen[String] = Gen.oneOf("null", "null", "1", "\"x\"", "[]", "[1]",
+      "[null]", "[{\"z\":null}]", "[{\"z\":[2]}]", "{\"y\":null}", "{\"y\":{\"w\":1}}")
+    val lineGen: Gen[String] = Gen.frequency(
+      8 -> Gen.nonEmptyListOf(Gen.zip(Gen.oneOf("a", "b", "c"), valueGen)).map(fs =>
+        fs.distinctBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")),
+      1 -> Gen.oneOf("nope", "[1]", """{"a":""", "null"))
+    val caseGen: Gen[Seq[Seq[(String, String)]]] = for {
+      nKeys <- Gen.choose(1, 3)
+      n     <- Gen.choose(1, 12)
+      pairs <- Gen.listOfN(n, Gen.zip(Gen.oneOf(Seq("k1", "k2", "k3").take(nKeys)), lineGen))
+      cuts  <- Gen.listOfN(3, Gen.choose(0, n)).map(cs => (0 +: cs.sorted :+ n).distinct)
+    } yield cuts.sliding(2).collect { case Seq(a, b) if b > a => pairs.slice(a, b) }.toSeq
+
+    it("every batch cut gives the whole-input fold, per key") {
+      val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20)
+        .withWorkers(1), Prop.forAllNoShrink(caseGen)(check))
+      assert(r.passed, r.status.toString)
     }
   }
 
