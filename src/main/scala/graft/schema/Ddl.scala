@@ -80,12 +80,16 @@ object Ddl {
       schema: StructType,
       name: String,
       location: String,
-      serde: String = JsonSerDe): String =
+      serde: String = JsonSerDe): String = {
+    // Hive rejects an empty column block with a parse error that names
+    // neither the table nor the cause.
+    require(schema.nonEmpty, s"table $name has no column; Hive rejects a CREATE with none")
     Seq(
       s"CREATE EXTERNAL TABLE $name (",
       columns(sanitize(schema).asInstanceOf[StructType]),
       s") ROW FORMAT SERDE '$serde'",
       s"location '$location'").mkString("\n")
+  }
 
   /** Hive-partitioned variant: `partitions` (name → Hive type) render
     * as `PARTITIONED BY` and are EXCLUDED from the column block (Hive

@@ -157,6 +157,16 @@ object JType {
       StructType(fs.map { case (k, v) => StructField(k, toDataType(v)) })
   }
 
+  /** The table schema of an inference fold's value: its Spark struct, or
+    * None when the value is not an object or has no field (every valid
+    * line was `{}`), as Hive rejects a table with no column. Every fold's
+    * output edge ([[RouteStats.schema]],
+    * [[graft.streaming.InferStream.SchemaEvolution]]) goes through it. */
+  def tableSchema(t: JType): Option[StructType] = toDataType(t) match {
+    case s: StructType if s.nonEmpty => Some(s)
+    case _                           => None
+  }
+
   /** True iff `after`'s Spark form differs from `before`'s: the change
     * test of every schema an inference fold emits as it evolves
     * ([[graft.streaming.InferStream.SchemaEvolution]],

@@ -58,9 +58,9 @@ final class ShapeFold(typed: Boolean, var shape: JType = JNull) {
 /** [[SchemaInference.routedStats]]'s result: the valid rows' merged
   * lattice value, lowered to Spark types only on demand, and the counts. */
 final case class RouteStats(shape: JType, nValid: Long, nInvalid: Long) {
-  /** The table schema; None when no row was a valid JSON object. */
-  def schema: Option[StructType] =
-    Some(JType.toDataType(shape)).collect { case s: StructType if nValid > 0 => s }
+  /** The table schema; None when no row was a valid JSON object with a
+    * field ([[JType.tableSchema]]). */
+  def schema: Option[StructType] = JType.tableSchema(shape)
 }
 
 object SchemaInference {

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.schema.{Ddl, JNull, JType}
+import graft.schema.{Ddl, JNull, JType, RouteStats}
 import graft.sources.JsonIngest
 
 /** Structured-Streaming schema inference — the reference's incremental
@@ -20,13 +20,15 @@ import graft.sources.JsonIngest
   */
 object InferStream {
 
-  /** Driver-held evolving schema (the stream's only mutable state). */
+  /** Driver-held evolving schema and routing counts (the stream's only
+    * mutable state). */
   final class SchemaEvolution(typed: Boolean = false) {
     @volatile private var current: JType = JNull
-    def schema: Option[StructType] = JType.toDataType(current) match {
-      case s: StructType if s.nonEmpty => Some(s)
-      case _                           => None
-    }
+    @volatile private var valid, invalid = 0L
+    def schema: Option[StructType] = JType.tableSchema(current)
+    /** Lines folded into the schema, and lines routed invalid, so far. */
+    def validLines: Long = valid
+    def invalidLines: Long = invalid
     /** Merge a batch's lattice value; true iff the lowered schema changed. */
     def merge(batch: JType): Boolean = synchronized {
       val next = JType.merge(current, batch, typed)
@@ -34,14 +36,29 @@ object InferStream {
       current = next
       changed
     }
+    /** Merge a batch's routed stats: its counts, then its lattice value. */
+    def add(batch: RouteStats): Boolean = synchronized {
+      valid += batch.nValid
+      invalid += batch.nInvalid
+      merge(batch.shape)
+    }
   }
 
   /** Stream NDJSON files appearing under `inPath`; on every schema
     * change, emit the refreshed CREATE EXTERNAL TABLE DDL via `onDdl`.
-    * Invalid lines only bump counters (poison-free routing). Pass an
-    * existing [[SchemaEvolution]] to keep evolving across restarts of the
-    * query (the checkpoint dedups input files; the schema state lives
-    * with the caller). */
+    * Invalid lines only bump [[SchemaEvolution.invalidLines]]
+    * (poison-free routing). Pass an existing [[SchemaEvolution]] to keep
+    * evolving across restarts of the query (the checkpoint dedups input
+    * files; the schema state lives with the caller).
+    *
+    * The query runs on a clone of `spark` whose only change is that a
+    * local `checkpoint` is written by [[LocalCheckpointFileManager]]:
+    * java.nio writes that fork no process, no `.crc` sidecars, no fsync
+    * (as with Spark's default manager), and a checkpoint that resumes
+    * under Spark's default manager and vice versa. `spark` itself, a
+    * non-local checkpoint and every other query keep Spark's default.
+    * Listeners registered on `spark.streams` do not see this query; use
+    * the returned handle's progress. */
   def run(
       spark: SparkSession,
       inPath: String,
@@ -53,12 +70,14 @@ object InferStream {
       trigger: Trigger = Trigger.AvailableNow(),
       state: Option[SchemaEvolution] = None): StreamingQuery = {
     val evo = state.getOrElse(new SchemaEvolution(typed))
-    spark.readStream.format("text").load(inPath)
+    val session = GraftBridge.cloneSession(spark)
+    session.conf.set(LocalCheckpointFileManager.ClassKey, classOf[LocalCheckpointFileManager].getName)
+    session.readStream.format("text").load(inPath)
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (evo.merge(JsonIngest.inferRoutedStats(batch, "value", typed).shape)) {
+        if (evo.add(JsonIngest.inferRoutedStats(batch, "value", typed))) {
           evo.schema.foreach(merged =>
             onDdl(Ddl.createExternalTable(merged, tableName, location)))
         }

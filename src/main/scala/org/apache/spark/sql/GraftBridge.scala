@@ -26,4 +26,10 @@ object GraftBridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** A new session sharing `spark`'s context and catalog, with copies of
+    * its SQL conf, temp views and functions: conf set on the clone leaves
+    * `spark` unchanged. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
 }

@@ -134,5 +134,19 @@ class DdlSpec extends AnyFunSpec {
         Seq("a" -> StringType, "n" -> LongType))
       hs.sql("DROP TABLE graft_ddl_spec_hive")
     }
+    it("registers an inferred object whose only field is {} with hiveMode = true") {
+      val hs = graft.catalog.HiveMode.session(graft.TestSpark.spark)
+      val dir = java.nio.file.Files.createTempDirectory("graft-ddl-hive-empty").toString
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/d.json"), """{"a": {}}""" + "\n")
+      val schema = graft.sources.JsonIngest
+        .inferRoutedStats(graft.sources.JsonIngest.readLines(hs, dir), "value").schema.get
+      graft.catalog.Register.externalJsonTable(hs, schema, "graft_ddl_spec_hive_empty", dir, hiveMode = true)
+      assert(hs.table("graft_ddl_spec_hive_empty").schema.fieldNames.toSeq == Seq("a"))
+      hs.sql("DROP TABLE graft_ddl_spec_hive_empty")
+    }
+    it("refuses a CREATE with no column, naming the table") {
+      val e = intercept[IllegalArgumentException](Ddl.createStatement(StructType(Nil), "t_none", "/loc"))
+      assert(e.getMessage.contains("t_none"))
+    }
   }
 }

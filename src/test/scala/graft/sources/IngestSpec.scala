@@ -88,6 +88,12 @@ class IngestSpec extends AnyFunSpec {
         JsonIngest.readLines(spark, path), "value")
       assert(stats.nValid == 0 && stats.nInvalid == 2 && stats.schema.isEmpty)
     }
+    it("gives no schema and no DDL when every valid line is {}") {
+      val path = writeNdjson(Seq("{}", "{ }", "{}"))
+      val stats = JsonIngest.inferRoutedStats(JsonIngest.readLines(spark, path), "value")
+      assert(stats.nValid == 3 && stats.nInvalid == 0 && stats.schema.isEmpty)
+      assert(JsonIngest.inferDdl(spark, path, "t_empty", "/loc")._1.isEmpty)
+    }
     it("counts lines nested past the cap as invalid without failing the job") {
       val cap = graft.schema.JsonShape.MaxDepth
       def nested(n: Int): String = "{\"deep\":" * n + "1" + "}" * n

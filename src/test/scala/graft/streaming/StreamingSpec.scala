@@ -37,6 +37,7 @@ class StreamingSpec extends AnyFunSpec {
         trigger = Trigger.AvailableNow(), state = Some(evo))
       q2.awaitTermination()
       assert(ddls.size == 2)
+      assert(evo.validLines == 3 && evo.invalidLines == 1)
       assert(ddls(1).contains("`a` STRING") && ddls(1).contains("`b` STRING")
         && ddls(1).contains("`c` ARRAY"))
 
@@ -48,6 +49,7 @@ class StreamingSpec extends AnyFunSpec {
         trigger = Trigger.AvailableNow(), state = Some(evo))
       q3.awaitTermination()
       assert(ddls.size == 2)
+      assert(evo.validLines == 4 && evo.invalidLines == 1)
     }
     it("gives the schema of the whole input however batches cut it") {
       val in = Files.createTempDirectory("graft-stream-cut-in").toString
@@ -67,6 +69,55 @@ class StreamingSpec extends AnyFunSpec {
       // A null-only field turning STRING changes no column: no third DDL.
       assert(ddls.size == 2)
       assert(ddls(1).contains("`a` ARRAY"))
+    }
+
+    // A checkpoint that either manager wrote must resume under the other:
+    // a plain `readStream.text` → `foreachBatch` query of the same shape
+    // runs on Spark's default manager, which writes `.N.crc` sidecars.
+    def sidecars(cp: String): Seq[String] =
+      Seq("offsets", "commits").flatMap { d =>
+        Option(new java.io.File(s"$cp/$d").list()).toSeq.flatten.filter(_.endsWith(".crc"))
+      }
+    def defaultQuery(in: String, cp: String, seen: scala.collection.mutable.Buffer[String]): Unit =
+      spark.readStream.text(in).writeStream
+        .option("checkpointLocation", cp)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          seen.synchronized { seen ++= b.as[String].collect() }
+          ()
+        }
+        .start().awaitTermination()
+    def write(in: String, name: String, lines: String*): Unit =
+      Files.writeString(java.nio.file.Paths.get(s"$in/$name"), lines.mkString("", "\n", "\n"))
+
+    it("resumes a checkpoint of Spark's default manager without re-reading a file") {
+      val in = Files.createTempDirectory("graft-stream-compat-in").toString
+      val cp = Files.createTempDirectory("graft-stream-compat-cp").toString
+      val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+      write(in, "b1.ndjson", """{"a": 1}""", """{"a": 2}""")
+      defaultQuery(in, cp, seen)
+      assert(seen.size == 2 && sidecars(cp).nonEmpty)
+      write(in, "b2.ndjson", """{"b": "x"}""", "garbage-line")
+      val evo = new InferStream.SchemaEvolution()
+      InferStream.run(spark, in, cp, "t_stream_compat", "/loc", _ => (),
+        trigger = Trigger.AvailableNow(), state = Some(evo)).awaitTermination()
+      assert(evo.validLines == 1 && evo.invalidLines == 1)
+      assert(evo.schema.map(_.fieldNames.toSeq).contains(Seq("b")))
+      assert(spark.conf.getOption(LocalCheckpointFileManager.ClassKey).isEmpty)
+    }
+    it("leaves a checkpoint Spark's default manager resumes without re-reading a file") {
+      val in = Files.createTempDirectory("graft-stream-compat2-in").toString
+      val cp = Files.createTempDirectory("graft-stream-compat2-cp").toString
+      write(in, "b1.ndjson", """{"a": 1}""", """{"a": 2}""")
+      val evo = new InferStream.SchemaEvolution()
+      InferStream.run(spark, in, cp, "t_stream_compat2", "/loc", _ => (),
+        trigger = Trigger.AvailableNow(), state = Some(evo)).awaitTermination()
+      assert(evo.validLines == 2 && sidecars(cp).isEmpty)
+      assert(spark.conf.getOption(LocalCheckpointFileManager.ClassKey).isEmpty)
+      write(in, "b2.ndjson", """{"b": "x"}""")
+      val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+      defaultQuery(in, cp, seen)
+      assert(seen.toSeq == Seq("""{"b": "x"}"""))
     }
   }
 
