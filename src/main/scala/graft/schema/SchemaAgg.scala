@@ -1,10 +1,15 @@
 package graft.schema
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.sources.{FileRange, LineRangeRDD, LineRanges}
 
 /** Per-group schema inference (SQL, `groupBy`) as a typed [[Aggregator]].
   *
@@ -65,6 +70,9 @@ final case class RouteStats(shape: JType, nValid: Long, nInvalid: Long) {
 
 object SchemaInference {
 
+  /** A partition's fold: its [[JTypeCodec]] buffer, valid and invalid lines. */
+  private[schema] type Folded = (Array[Byte], Long, Long)
+
   /** Column-level inference aggregate: `infer_schema_agg(jsonCol)` →
     * DataType-JSON string, NULL for a group with no valid row. Usable in
     * `groupBy(...).agg(...)` for per-key schemas. */
@@ -85,24 +93,73 @@ object SchemaInference {
   }
 
   /** Routing + schema inference in ONE pass over `col`, a string column.
-    * Each partition folds its rows' UTF-8 bytes through [[ShapeFold]]:
-    * valid JSON objects widen its schema, any other row (null included)
-    * counts invalid. The partitions' [[JTypeCodec]] buffers are collected
-    * and merged in partition-index order, so the job has one stage and no
-    * shuffle, and the schema equals the sequential fold, field order
-    * included ([[JType.merge]] is associative, keeping first-seen order). */
+    * Each partition folds its lines' UTF-8 bytes through [[ShapeFold]]:
+    * valid JSON objects widen its schema, any other line (null included)
+    * counts invalid. One `runJob` collects the partitions' [[JTypeCodec]]
+    * buffers, merged in partition-index order, so the job has one stage and
+    * no shuffle, and the schema equals the sequential fold, field order
+    * included ([[JType.merge]] is associative, keeping first-seen order).
+    *
+    * Lines come one of two ways. When `df` is a plain scan of local,
+    * uncompressed text files with default options (the whole test in
+    * [[graft.sources.LineRanges.plan]]), the byte path reads the files in
+    * path order by byte range and folds each line where it sits in the read
+    * buffer: no scan plan, no broadcast Hadoop conf, no row copy. Every
+    * other input (a filtered or joined plan, a streaming micro-batch, a
+    * remote, compressed or checksummed file, non-default text options) is
+    * planned and its rows folded. Both give the lines Spark's text source
+    * gives; for several files, the field order is the fold's order over the
+    * files sorted by path. */
   def routedStats(df: DataFrame, col: String, typed: Boolean = false): RouteStats = {
-    val column = df.select(df(col))
-    require(column.schema.head.dataType == StringType,
-      s"schema inference reads a string column; $col is ${column.schema.head.dataType.sql}")
-    val parts = column.queryExecution.toRdd.mapPartitions { rows =>
-      val f = new ShapeFold(typed)
-      rows.foreach(r => f.add(r.getUTF8String(0)))
-      Iterator.single((new JTypeCodec().encode(f.shape), f.nValid, f.nInvalid))
-    }.collect()
+    val parts = LineRanges.plan(df, col) match {
+      case Some(ranges) =>
+        foldPartitions(new LineRangeRDD(df.sparkSession.sparkContext, ranges), new FoldRanges(typed))
+      case None =>
+        val column = df.select(df(col))
+        require(column.schema.head.dataType == StringType,
+          s"schema inference reads a string column; $col is ${column.schema.head.dataType.sql}")
+        foldPartitions(column.queryExecution.toRdd, new FoldRows(typed))
+    }
     val codec = new JTypeCodec
     parts.foldLeft(RouteStats(JNull, 0L, 0L)) { case (s, (bytes, v, i)) =>
       RouteStats(JType.merge(s.shape, codec.decode(bytes), typed), s.nValid + v, s.nInvalid + i)
     }
+  }
+
+  /** Runs `fold` over every partition of `rdd` as one job; results in
+    * partition-index order. */
+  private def foldPartitions[T](rdd: RDD[T], fold: PartitionFold[T]): Array[Folded] = {
+    val out = new Array[Folded](rdd.getNumPartitions)
+    rdd.sparkContext.runJob(rdd, fold, out.indices, (i: Int, part: Folded) => out(i) = part)
+    out
+  }
+}
+
+/** One partition's [[ShapeFold]], encoded for the driver. The job functions
+  * are named classes, not lambdas: Spark's closure cleaner then reads no
+  * class file per job, where a lambda defined in `RDD` or `SparkContext`
+  * costs it an ASM pass over those classes. */
+private abstract class PartitionFold[T](typed: Boolean)
+    extends ((TaskContext, Iterator[T]) => SchemaInference.Folded) with Serializable {
+  protected def feed(context: TaskContext, in: Iterator[T], fold: ShapeFold): Unit
+  final def apply(context: TaskContext, in: Iterator[T]): SchemaInference.Folded = {
+    val f = new ShapeFold(typed)
+    feed(context, in, f)
+    (new JTypeCodec().encode(f.shape), f.nValid, f.nInvalid)
+  }
+}
+
+/** The row path: a planned scan's rows, the line in column 0. */
+private final class FoldRows(typed: Boolean) extends PartitionFold[InternalRow](typed) {
+  protected def feed(context: TaskContext, rows: Iterator[InternalRow], fold: ShapeFold): Unit =
+    rows.foreach(r => fold.add(r.getUTF8String(0)))
+}
+
+/** The byte path: each range's lines, read where they sit; the bytes and
+  * lines read count as the task's input, as a file scan's do. */
+private final class FoldRanges(typed: Boolean) extends PartitionFold[FileRange](typed) {
+  protected def feed(context: TaskContext, ranges: Iterator[FileRange], fold: ShapeFold): Unit = {
+    val bytes = ranges.map(r => LineRanges.read(r)(line => fold.add(line))).sum
+    GraftBridge.addInput(context, bytes, fold.nValid + fold.nInvalid)
   }
 }

@@ -64,7 +64,14 @@ object JsonIngest {
   /** The whole reference pipeline — validate, route-count, infer — in ONE
     * scan and ONE parse per line, as one stage with no shuffle
     * ([[SchemaInference.routedStats]]; the reference reads twice,
-    * `HiveSchemaGenerator.scala:75,98`; SURVEY.md §4 flags it). */
+    * `HiveSchemaGenerator.scala:75,98`; SURVEY.md §4 flags it).
+    *
+    * On [[readLines]] of local, uncompressed files with default options,
+    * the lines are read straight off the file bytes ([[LineRanges]]: no
+    * scan plan, no broadcast Hadoop conf, no per-line row copy), with the
+    * lines Spark's text source would give; any other `df` is planned and
+    * its rows folded. For several files, the field order follows the files
+    * sorted by path. */
   def inferRoutedStats(df: DataFrame, col: String, typed: Boolean = false): RouteStats =
     SchemaInference.routedStats(df, col, typed)
 

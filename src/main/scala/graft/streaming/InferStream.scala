@@ -17,6 +17,9 @@ import graft.sources.JsonIngest
   * O(schema) state, exactly like the reference's accumulator — and the
   * DDL is re-emitted only when the merged schema's Spark form changes.
   * As the state is never lowered, batch cuts do not change the schema.
+  * A micro-batch reaches `foreachBatch` as a `LogicalRDD`, not a text
+  * relation, so it always takes the planned row path of
+  * [[graft.schema.SchemaInference.routedStats]], never its byte path.
   */
 object InferStream {
 

@@ -1,8 +1,11 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.internal.SQLConf
 
-/** Narrow bridge into Spark's `private[sql]` surface.
+/** Narrow bridge into Spark's `private[sql]` and `private[spark]` surface.
   *
   * Spark 4.x made `Column(expr)` / `ExpressionUtils` / the function
   * registry `private[sql]`; graft's native Catalyst expressions
@@ -32,4 +35,21 @@ object GraftBridge {
     * `spark` unchanged. */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `spark`'s SQL conf. */
+  def sqlConf(spark: SparkSession): SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
+  /** The Hadoop conf a file scan with these data-source `options` reads
+    * under (session SQL conf and options included). */
+  def hadoopConf(spark: SparkSession, options: Map[String, String]): Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConfWithOptions(options)
+
+  /** Adds to the running task's input metrics, as a file scan does; the
+    * incrementers are `private[spark]`. */
+  def addInput(context: TaskContext, bytes: Long, records: Long): Unit = {
+    val m = context.taskMetrics().inputMetrics
+    m.incBytesRead(bytes)
+    m.incRecordsRead(records)
+  }
 }
