@@ -1,6 +1,6 @@
 package graft.schema
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -102,36 +102,44 @@ object SchemaInference {
     *
     * Lines come one of two ways. When `df` is a plain scan of local,
     * uncompressed text files with default options (the whole test in
-    * [[graft.sources.LineRanges.plan]]), the byte path reads the files in
-    * path order by byte range and folds each line where it sits in the read
-    * buffer: no scan plan, no broadcast Hadoop conf, no row copy. Every
-    * other input (a filtered or joined plan, a streaming micro-batch, a
-    * remote, compressed or checksummed file, non-default text options) is
-    * planned and its rows folded. Both give the lines Spark's text source
-    * gives; for several files, the field order is the fold's order over the
-    * files sorted by path. */
-  def routedStats(df: DataFrame, col: String, typed: Boolean = false): RouteStats = {
-    val parts = LineRanges.plan(df, col) match {
-      case Some(ranges) =>
-        foldPartitions(new LineRangeRDD(df.sparkSession.sparkContext, ranges), new FoldRanges(typed))
+    * [[graft.sources.LineRanges.plan]]), the byte path
+    * ([[rangeStats]]) reads the files in path order by byte range and
+    * folds each line where it sits in the read buffer: no scan plan, no
+    * broadcast Hadoop conf, no row copy. Every other input (a filtered or
+    * joined plan, a remote, compressed or checksummed file, non-default
+    * text options) is planned and its rows folded ([[rowStats]]). Both
+    * give the lines Spark's text source gives; for several files, the
+    * field order is the fold's order over the files sorted by path.
+    * [[graft.streaming.InferStream]]'s sink folds each micro-batch through
+    * the same two paths. */
+  def routedStats(df: DataFrame, col: String, typed: Boolean = false): RouteStats =
+    LineRanges.plan(df, col) match {
+      case Some(ranges) => rangeStats(df.sparkSession.sparkContext, ranges, typed)
       case None =>
         val column = df.select(df(col))
         require(column.schema.head.dataType == StringType,
           s"schema inference reads a string column; $col is ${column.schema.head.dataType.sql}")
-        foldPartitions(column.queryExecution.toRdd, new FoldRows(typed))
+        rowStats(column.queryExecution.toRdd, typed)
     }
+
+  /** The byte path: folds the lines of `ranges` ([[LineRanges.plan]]),
+    * one partition per range sequence. */
+  private[graft] def rangeStats(sc: SparkContext, ranges: IndexedSeq[Seq[FileRange]], typed: Boolean): RouteStats =
+    foldPartitions(new LineRangeRDD(sc, ranges), new FoldRanges(typed), typed)
+
+  /** The row path: folds column 0, a string, of every row of `rows`. */
+  private[graft] def rowStats(rows: RDD[InternalRow], typed: Boolean): RouteStats =
+    foldPartitions(rows, new FoldRows(typed), typed)
+
+  /** Runs `fold` over every partition of `rdd` as one job and merges the
+    * partitions' results in index order. */
+  private def foldPartitions[T](rdd: RDD[T], fold: PartitionFold[T], typed: Boolean): RouteStats = {
+    val parts = new Array[Folded](rdd.getNumPartitions)
+    rdd.sparkContext.runJob(rdd, fold, parts.indices, (i: Int, part: Folded) => parts(i) = part)
     val codec = new JTypeCodec
     parts.foldLeft(RouteStats(JNull, 0L, 0L)) { case (s, (bytes, v, i)) =>
       RouteStats(JType.merge(s.shape, codec.decode(bytes), typed), s.nValid + v, s.nInvalid + i)
     }
-  }
-
-  /** Runs `fold` over every partition of `rdd` as one job; results in
-    * partition-index order. */
-  private def foldPartitions[T](rdd: RDD[T], fold: PartitionFold[T]): Array[Folded] = {
-    val out = new Array[Folded](rdd.getNumPartitions)
-    rdd.sparkContext.runJob(rdd, fold, out.indices, (i: Int, part: Folded) => out(i) = part)
-    out
   }
 }
 

@@ -10,8 +10,8 @@ import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.{Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.text.TextFileFormat
@@ -48,8 +48,13 @@ object LineRanges {
   final val MaxBuffer: Int = 256 << 10
 
   /** The only read options the byte path takes; any other keeps the row
-    * path. */
-  private val PathOptions = Set("path", "paths")
+    * path. `basePath` and `__globPaths__` (which a streaming micro-batch's
+    * relation always carries) act only while the file index is built:
+    * `basePath` sets where partition discovery starts and `__globPaths__`
+    * whether a path is expanded as a glob. The byte path reads the files
+    * that index already holds, and only when it found no partition
+    * column, so neither key changes which lines are read. */
+  private val PathOptions = Set("path", "paths", "basepath", "__globpaths__")
 
   private val MaxLineLength = "mapreduce.input.linerecordreader.line.maxlength"
 
@@ -61,26 +66,31 @@ object LineRanges {
 
   /** The byte ranges holding `df`'s column `col`, one sequence per
     * partition in index order; None unless the byte path reads exactly the
-    * lines Spark's text scan would. That needs `df`'s analyzed plan to be a
-    * text relation with no partition columns (optionally under a `Project`
-    * of its attributes), `col` its `value` column, default text options,
-    * `spark.sql.files.ignoreCorruptFiles`/`ignoreMissingFiles` off, no
-    * `line.maxlength`, and every file local (`file:` on a stock local file
-    * system), uncompressed and without a `.<name>.crc` sidecar,
-    * which Spark would verify.
+    * lines Spark's text scan would. See the other overload. */
+  def plan(df: DataFrame, col: String): Option[IndexedSeq[Seq[FileRange]]] =
+    plan(df.sparkSession, df.queryExecution.analyzed, col)
+
+  /** The byte ranges holding column `col` of `analyzed`, an analyzed plan
+    * of `spark`; None unless the byte path reads exactly the lines Spark's
+    * text scan would. That needs `analyzed` to be a text relation with no
+    * partition columns, batch or a streaming micro-batch's (optionally
+    * under a `Project` that keeps or renames its attributes), `col` its
+    * `value` column, text options no other than the path keys
+    * ([[PathOptions]]), `spark.sql.files.ignoreCorruptFiles`/
+    * `ignoreMissingFiles` off, no `line.maxlength`, and every file local
+    * (`file:` on a stock local file system), uncompressed and without a
+    * `.<name>.crc` sidecar, which Spark would verify.
     *
     * The files are read in path order, cut into about `defaultParallelism`
     * contiguous ranges of near-equal size: each no larger than
     * `spark.sql.files.maxPartitionBytes`, and fewer ranges where one would
     * be smaller than `spark.sql.files.openCostInBytes`. */
-  def plan(df: DataFrame, col: String): Option[IndexedSeq[Seq[FileRange]]] = {
-    val spark = df.sparkSession
+  def plan(spark: SparkSession, analyzed: LogicalPlan, col: String): Option[IndexedSeq[Seq[FileRange]]] = {
     val sql = GraftBridge.sqlConf(spark)
-    val analyzed = df.queryExecution.analyzed
     for {
-      (rel, fs) <- textRelation(analyzed)
+      (fs, values) <- textRelation(analyzed)
       value <- analyzed.output.find(a => sql.resolver(a.name, col))
-      if value.exprId == rel.output.head.exprId && !sql.ignoreCorruptFiles && !sql.ignoreMissingFiles
+      if values.contains(value.exprId) && !sql.ignoreCorruptFiles && !sql.ignoreMissingFiles
       hadoop = GraftBridge.hadoopConf(spark, fs.options)
       if hadoop.get(MaxLineLength) == null
       files = fs.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus).sortBy(_.getPath.toString)
@@ -95,18 +105,25 @@ object LineRanges {
     }
   }
 
-  /** `plan` as a bare text relation and its file relation. */
-  private def textRelation(plan: LogicalPlan): Option[(LogicalRelation, HadoopFsRelation)] = {
-    val rel = plan match {
-      case r: LogicalRelation => Some(r)
-      case Project(list, r: LogicalRelation)
-          if list.forall { case a: AttributeReference => r.outputSet.contains(a); case _ => false } => Some(r)
-      case _ => None
+  /** `plan` as a bare text relation: its file relation, and the output
+    * columns of `plan` that carry the relation's `value` column. */
+  private def textRelation(plan: LogicalPlan): Option[(HadoopFsRelation, Seq[ExprId])] = {
+    // Each output column and the relation column it passes on, if any.
+    val (child, passed) = plan match {
+      case Project(list, child) => child -> list.map {
+        case a: AttributeReference => Some(a.exprId -> a.exprId)
+        case al @ Alias(a: AttributeReference, _) => Some(al.exprId -> a.exprId)
+        case _ => None
+      }
+      case p => p -> p.output.map(a => Some(a.exprId -> a.exprId))
     }
-    rel.collect { case r @ LogicalRelation(fs: HadoopFsRelation, _, _, false, _)
-      if fs.fileFormat.getClass == classOf[TextFileFormat] && fs.partitionSchema.isEmpty &&
-        fs.bucketSpec.isEmpty && fs.options.keys.forall(k => PathOptions(k.toLowerCase(Locale.ROOT))) =>
-      (r, fs)
+    child match {
+      case LogicalRelation(fs: HadoopFsRelation, output, _, _, _)
+          if fs.fileFormat.getClass == classOf[TextFileFormat] && fs.partitionSchema.isEmpty &&
+            fs.bucketSpec.isEmpty && fs.options.keys.forall(k => PathOptions(k.toLowerCase(Locale.ROOT))) &&
+            passed.forall(_.exists(p => output.exists(_.exprId == p._2))) =>
+        Some(fs -> passed.flatten.collect { case (out, in) if in == output.head.exprId => out })
+      case _ => None
     }
   }
 

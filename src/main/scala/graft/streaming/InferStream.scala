@@ -5,21 +5,21 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.schema.{Ddl, JNull, JType, RouteStats}
-import graft.sources.JsonIngest
+import graft.schema.{JNull, JType, RouteStats}
 
 /** Structured-Streaming schema inference — the reference's incremental
   * per-record fold (`CreateHQL.scala:14-20`) lifted to event streams.
   *
-  * Each micro-batch runs the single-pass partition fold
-  * ([[graft.sources.JsonIngest.inferRoutedStats]]); the batch's lattice
+  * Each micro-batch runs the single-pass partition fold of
+  * [[graft.schema.SchemaInference.routedStats]]; the batch's lattice
   * value is merged into the evolving [[JType]] of [[SchemaEvolution]] —
   * O(schema) state, exactly like the reference's accumulator — and the
   * DDL is re-emitted only when the merged schema's Spark form changes.
   * As the state is never lowered, batch cuts do not change the schema.
-  * A micro-batch reaches `foreachBatch` as a `LogicalRDD`, not a text
-  * relation, so it always takes the planned row path of
-  * [[graft.schema.SchemaInference.routedStats]], never its byte path.
+  * Each micro-batch reaches graft's own sink ([[InferSink]]) as the
+  * batch's text relation, so a plain local batch folds off the file bytes
+  * as batch input does (the byte path), and any other batch folds the rows
+  * of the batch's own plan.
   */
 object InferStream {
 
@@ -61,7 +61,10 @@ object InferStream {
     * under Spark's default manager and vice versa. `spark` itself, a
     * non-local checkpoint and every other query keep Spark's default.
     * Listeners registered on `spark.streams` do not see this query; use
-    * the returned handle's progress. */
+    * the returned handle's progress, whose `numInputRows` counts each
+    * batch's lines on both of the sink's paths. An exception from `onDdl`
+    * fails the query, unwrapped, before the batch commits: a restart on
+    * the same checkpoint reads the batch's files again. */
   def run(
       spark: SparkSession,
       inPath: String,
@@ -75,17 +78,8 @@ object InferStream {
     val evo = state.getOrElse(new SchemaEvolution(typed))
     val session = GraftBridge.cloneSession(spark)
     session.conf.set(LocalCheckpointFileManager.ClassKey, classOf[LocalCheckpointFileManager].getName)
-    session.readStream.format("text").load(inPath)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (evo.add(JsonIngest.inferRoutedStats(batch, "value", typed))) {
-          evo.schema.foreach(merged =>
-            onDdl(Ddl.createExternalTable(merged, tableName, location)))
-        }
-      }
-      .start()
+    GraftBridge.startQuery(session.readStream.format("text").load(inPath),
+      new InferSink(evo, onDdl, tableName, location, typed), checkpoint, trigger)
   }
 
   /** In-stream exact dedup on `idCols` bounded by the watermark —

@@ -3,7 +3,9 @@ package org.apache.spark.sql
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Narrow bridge into Spark's `private[sql]` and `private[spark]` surface.
   *
@@ -51,5 +53,15 @@ object GraftBridge {
     val m = context.taskMetrics().inputMetrics
     m.incBytesRead(bytes)
     m.incRecordsRead(records)
+  }
+
+  /** Starts the streaming `df` into `sink`, a v1 streaming sink instance,
+    * in append mode, checkpointing to `checkpoint`: what
+    * `DataStreamWriter.start` does once it has built its own sink, which
+    * leaves no sink to register. */
+  def startQuery(df: DataFrame, sink: Sink, checkpoint: String, trigger: Trigger): StreamingQuery = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    ds.sparkSession.streams.startQuery(None, Some(checkpoint), ds, Map("checkpointLocation" -> checkpoint),
+      sink, OutputMode.Append(), trigger = trigger)
   }
 }

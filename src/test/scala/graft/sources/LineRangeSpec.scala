@@ -1,14 +1,11 @@
 package graft.sources
 
 import java.nio.file.{Files, Path}
-import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.zip.GZIPOutputStream
 
-import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path => HPath, RawLocalFileSystem}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.unsafe.types.UTF8String
@@ -72,29 +69,10 @@ class LineRangeSpec extends AnyFunSpec {
   private def jobsOf(body: => Unit): Seq[Seq[Seq[String]]] = {
     val sc = spark.sparkContext
     val group = s"graft-line-range-${System.nanoTime()}"
-    val marker = group + "-marker"
-    val jobs = new ConcurrentLinkedQueue[(String, Seq[Seq[String]])]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull ->
-          e.stageInfos.map(_.rddInfos.map(_.name)))
-    }
-    sc.addSparkListener(listener)
-    try {
+    TestSpark.jobsDuring {
       sc.setJobGroup(group, "under test")
-      body
-      // Events reach listeners in order: once the marker job's start is
-      // seen, every job `body` ran has been seen too.
-      sc.setJobGroup(marker, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 20e9.toLong
-      while (!jobs.asScala.exists(_._1 == marker) && System.nanoTime() < deadline) Thread.sleep(5)
-      assert(jobs.asScala.exists(_._1 == marker), "listener saw no marker job")
-      jobs.asScala.toSeq.filter(_._1 == group).map(_._2)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+      try body finally sc.clearJobGroup()
+    }.collect { case (`group`, stages) => stages }
   }
 
   describe("LineRanges line rules") {
@@ -256,6 +234,12 @@ class LineRangeSpec extends AnyFunSpec {
       rowPath(spark.read.option("lineSep", "\n").text(plain.toString), "lineSep")
       rowPath(spark.read.option("wholetext", "true").text(plain.toString), "wholetext")
       rowPath(spark.read.option("wholetext", "false").text(plain.toString), "wholetext=false")
+      // `basePath` only says where partition discovery starts; with no
+      // partition column it reads the same lines, so it keeps the byte path.
+      val based = spark.read.option("basePath", plain.getParent.toString).text(plain.getParent.toString)
+      var basedStats: RouteStats = null
+      assert(jobsOf { basedStats = JsonIngest.inferRoutedStats(based, "value") }.flatten.flatten == Seq("LineRangeRDD"))
+      assert(basedStats == base)
       for (key <- Seq("spark.sql.files.ignoreCorruptFiles", "spark.sql.files.ignoreMissingFiles"))
         rowPath(JsonIngest.readLines(session(key -> "true"), plain.toString), key)
       rowPath(JsonIngest.readLines(session(

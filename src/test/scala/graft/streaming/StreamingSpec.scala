@@ -1,8 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, StandardCopyOption}
+import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 import org.scalatest.funspec.AnyFunSpec
 
 import graft.TestSpark
@@ -118,6 +120,122 @@ class StreamingSpec extends AnyFunSpec {
       val seen = scala.collection.mutable.ArrayBuffer.empty[String]
       defaultQuery(in, cp, seen)
       assert(seen.toSeq == Seq("""{"b": "x"}"""))
+    }
+
+    it("fails the query on an onDdl error before the batch commits; a restart re-reads it") {
+      val in = Files.createTempDirectory("graft-stream-fail-in").toString
+      val cp = Files.createTempDirectory("graft-stream-fail-cp").toString
+      write(in, "b1.ndjson", """{"a": 1}""", """{"b": "x"}""")
+      val boom = new IllegalStateException("register failed")
+      val e = intercept[StreamingQueryException] {
+        InferStream.run(spark, in, cp, "t_stream_fail", "/loc", _ => throw boom,
+          trigger = Trigger.AvailableNow()).awaitTermination()
+      }
+      assert(e.getCause eq boom)
+      assert(new java.io.File(s"$cp/offsets/0").exists && !new java.io.File(s"$cp/commits/0").exists)
+      // At least once: the restart folds the uncommitted batch again and
+      // emits its DDL.
+      val ddls = scala.collection.mutable.ArrayBuffer.empty[String]
+      val evo = new InferStream.SchemaEvolution()
+      InferStream.run(spark, in, cp, "t_stream_fail", "/loc", ddl => ddls.synchronized { ddls += ddl },
+        trigger = Trigger.AvailableNow(), state = Some(evo)).awaitTermination()
+      assert(ddls.size == 1 && ddls.head.contains("`a` STRING") && ddls.head.contains("`b` STRING"))
+      assert(evo.validLines == 2 && evo.invalidLines == 0)
+      assert(new java.io.File(s"$cp/commits/0").exists)
+    }
+  }
+
+  describe("InferStream.run's sink (which path a micro-batch takes)") {
+    // Valid, invalid and empty lines, and a CRLF.
+    val text = Seq("""{"a":1,"b":{"c":"x"}}""", "nope", """{"d":[1,2],"a":"y"}""", "", """{"e":null}""")
+      .mkString("", "\n", "\r\n")
+    def plain(dir: Path, name: String, copies: Int): Int = {
+      Files.writeString(dir.resolve(name), text * copies)
+      5 * copies
+    }
+    def gzip(dir: Path, name: String, copies: Int): Int = {
+      val out = new GZIPOutputStream(Files.newOutputStream(dir.resolve(name)))
+      try out.write((text * copies).getBytes("UTF-8")) finally out.close()
+      5 * copies
+    }
+    def session(confs: (String, String)*): SparkSession = {
+      val s = GraftBridge.cloneSession(spark)
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      s
+    }
+
+    /** What one `InferStream.run` did: the RDD names of each stage of each
+      * job it ran, each batch's `numInputRows`, each drop's lines, and its
+      * state. */
+    final case class Ran(jobs: Seq[Seq[Seq[String]]], inputRows: Seq[Long], lines: Seq[Long],
+        evo: InferStream.SchemaEvolution)
+
+    /** Runs `InferStream` under `trigger` over `drops`, each of which
+      * writes files into a directory and returns their lines; the files
+      * are then moved into the watched directory, under `AvailableNow` all
+      * before one run, under `ProcessingTime(0)` one drop per batch. */
+    def run(s: SparkSession, trigger: Trigger, drops: (Path => Int)*): Ran = {
+      val in = Files.createTempDirectory("graft-sink-in")
+      val cp = Files.createTempDirectory("graft-sink-cp").toString
+      val evo = new InferStream.SchemaEvolution()
+      var q: StreamingQuery = null
+      val lines = scala.collection.mutable.ArrayBuffer.empty[Long]
+      def drop(d: Path => Int): Unit = {
+        val staged = Files.createTempDirectory("graft-sink-staged")
+        lines += d(staged)
+        Files.list(staged).toArray(n => new Array[Path](n)).foreach(f =>
+          Files.move(f, in.resolve(f.getFileName), StandardCopyOption.ATOMIC_MOVE))
+      }
+      def start(): Unit = q = InferStream.run(s, in.toString, cp, "t_sink", "/loc", _ => (),
+        trigger = trigger, state = Some(evo))
+      val jobs = TestSpark.jobsDuring {
+        if (trigger == Trigger.AvailableNow()) {
+          drops.foreach(drop)
+          start()
+          q.awaitTermination()
+        } else {
+          start()
+          try drops.foreach { d => drop(d); q.processAllAvailable() } finally q.stop()
+        }
+      }
+      val group = q.runId.toString
+      val batches = q.recentProgress.filter(_.durationMs.containsKey("addBatch")).map(_.numInputRows).toSeq
+      Ran(jobs.collect { case (`group`, stages) => stages }, batches, lines.toSeq, evo)
+    }
+    def same(a: InferStream.SchemaEvolution, b: InferStream.SchemaEvolution): Boolean =
+      a.schema == b.schema && a.validLines == b.validLines && a.invalidLines == b.invalidLines
+
+    it("folds a plain batch off the file bytes: one job, one stage, LineRangeRDD, under both triggers") {
+      val now = run(spark, Trigger.AvailableNow(), plain(_, "a.ndjson", 30), plain(_, "b.ndjson", 2))
+      assert(now.jobs == Seq(Seq(Seq("LineRangeRDD"))), now.jobs)
+      val timed = run(spark, Trigger.ProcessingTime(0L), plain(_, "a.ndjson", 30), plain(_, "b.ndjson", 2))
+      assert(timed.jobs == Seq.fill(2)(Seq(Seq("LineRangeRDD"))), timed.jobs)
+      assert(same(now.evo, timed.evo) && now.evo.validLines == 96 && now.evo.invalidLines == 64)
+      assert(now.evo.schema.map(_.fieldNames.toSeq).contains(Seq("a", "b", "d", "e")))
+    }
+
+    it("folds a compressed file's or an ignoreCorruptFiles session's batch as rows, to the same state") {
+      val bytes = run(spark, Trigger.AvailableNow(), plain(_, "a.ndjson", 30))
+      val gz = run(spark, Trigger.AvailableNow(), gzip(_, "a.ndjson.gz", 30))
+      val ignoring = run(session("spark.sql.files.ignoreCorruptFiles" -> "true"), Trigger.AvailableNow(),
+        plain(_, "a.ndjson", 30))
+      for ((ran, what) <- Seq(gz -> "gzip", ignoring -> "ignoreCorruptFiles")) {
+        assert(ran.jobs.size == 1 && ran.jobs.head.size == 1, s"$what: ${ran.jobs}")
+        assert(ran.jobs.head.head.contains("FileScanRDD") && !ran.jobs.head.head.contains("LineRangeRDD"),
+          s"$what: ${ran.jobs}")
+        assert(same(ran.evo, bytes.evo), what)
+      }
+    }
+
+    it("reports each batch's lines as its numInputRows, on the byte path and the row path") {
+      for (s <- Seq(spark, session("spark.sql.files.ignoreCorruptFiles" -> "true"))) {
+        val ran = run(s, Trigger.ProcessingTime(0L),
+          plain(_, "a.ndjson", 3), plain(_, "b.ndjson", 7), gzip(_, "c.ndjson.gz", 2))
+        assert(ran.inputRows == ran.lines, ran.inputRows)
+      }
+      // All of one AvailableNow batch's files.
+      val all = run(spark, Trigger.AvailableNow(), plain(_, "a.ndjson", 3), plain(_, "b.ndjson", 4))
+      assert(all.inputRows == Seq(all.lines.sum), all.inputRows)
     }
   }
 
