@@ -6,6 +6,7 @@ import java.nio.channels.FileChannel
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.Locale
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.{Partition, SparkContext, TaskContext}
@@ -64,6 +65,10 @@ object LineRanges {
   private val StockLocal =
     Set(classOf[LocalFileSystem].getName, "org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem")
 
+  /** True when `hadoop` maps `file:` to a stock local file system. */
+  private[graft] def stockLocal(hadoop: Configuration): Boolean =
+    StockLocal(FileSystem.getFileSystemClass("file", hadoop).getName)
+
   /** The byte ranges holding `df`'s column `col`, one sequence per
     * partition in index order; None unless the byte path reads exactly the
     * lines Spark's text scan would. See the other overload. */
@@ -94,7 +99,7 @@ object LineRanges {
       hadoop = GraftBridge.hadoopConf(spark, fs.options)
       if hadoop.get(MaxLineLength) == null
       files = fs.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus).sortBy(_.getPath.toString)
-      if files.isEmpty || StockLocal(FileSystem.getFileSystemClass("file", hadoop).getName)
+      if files.isEmpty || stockLocal(hadoop)
       codecs = new CompressionCodecFactory(hadoop)
       if files.forall(f => plainLocal(f.getPath, codecs))
     } yield {

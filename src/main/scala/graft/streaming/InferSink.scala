@@ -15,7 +15,9 @@ import graft.sources.LineRanges
   * A batch reaches `addBatch` as the analyzed plan
   * `WriteToMicroBatchDataSourceV1` → `Project [value AS value]` → the
   * batch's text relation (a streaming `LogicalRelation` whose file index
-  * holds just the batch's files). Below the write node that is the bare
+  * holds just the batch's files: graft's [[BatchFileIndex]] for a plain
+  * local directory, Spark's `InMemoryFileIndex` for any other
+  * source path). Below the write node that is the bare
   * relation [[LineRanges.plan]] tests for batch input, so a plain batch
   * folds on the byte path and every other one folds the batch's own rows
   * (`queryExecution.toRdd`, what Spark's `ForeachBatchSink` executes): no
@@ -25,6 +27,8 @@ import graft.sources.LineRanges
   * leaf's `numOutputRows`, which `StreamingQueryProgress.numInputRows`
   * reads. A batch that throws (in `onDdl` too) fails the query before its
   * commit, so a restart folds it again: the DDL is emitted at least once.
+  * The batch is merged into `evo` only once `onDdl` returns, so a restart
+  * with the same `evo` emits the DDL again and counts the lines once.
   *
   * Version note: written against Spark 4.1.2, whose v1 `Sink` trait and
   * `WriteToMicroBatchDataSourceV1` node are Spark-internal classes of
@@ -54,7 +58,7 @@ private[streaming] final class InferSink(
       // Column 0 is the text source's `value`, its only column.
       case None => SchemaInference.rowStats(exec.toRdd, typed)
     }
-    if (evo.add(stats)) evo.schema.foreach(merged => onDdl(Ddl.createExternalTable(merged, tableName, location)))
+    evo.add(stats)(merged => onDdl(Ddl.createExternalTable(merged, tableName, location)))
   }
 
   override def toString: String = s"InferStream($tableName)"

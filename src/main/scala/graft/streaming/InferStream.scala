@@ -19,7 +19,9 @@ import graft.schema.{JNull, JType, RouteStats}
   * Each micro-batch reaches graft's own sink ([[InferSink]]) as the
   * batch's text relation, so a plain local batch folds off the file bytes
   * as batch input does (the byte path), and any other batch folds the rows
-  * of the batch's own plan.
+  * of the batch's own plan. A plain local directory is listed by graft's
+  * own source ([[LocalTextSource]]), which keeps its listing state from
+  * one trigger to the next.
   */
 object InferStream {
 
@@ -39,11 +41,18 @@ object InferStream {
       current = next
       changed
     }
-    /** Merge a batch's routed stats: its counts, then its lattice value. */
-    def add(batch: RouteStats): Boolean = synchronized {
+    /** Merge a batch's routed stats, its lattice value and its counts.
+      * When the lowered schema changes, the new schema goes to `onChange`
+      * first, and the batch is merged only once that returns: a batch
+      * whose `onChange` throws leaves the state as it was, so folding it
+      * again (after a restart, say) emits the change again and counts its
+      * lines once. */
+    def add(batch: RouteStats)(onChange: StructType => Unit): Unit = synchronized {
+      val next = JType.merge(current, batch.shape, typed)
+      if (JType.loweredChanged(current, next)) JType.tableSchema(next).foreach(onChange)
+      current = next
       valid += batch.nValid
       invalid += batch.nInvalid
-      merge(batch.shape)
     }
   }
 
@@ -53,6 +62,16 @@ object InferStream {
     * (poison-free routing). Pass an existing [[SchemaEvolution]] to keep
     * evolving across restarts of the query (the checkpoint dedups input
     * files; the schema state lives with the caller).
+    *
+    * A plain local directory is read by [[LocalTextSource]]: the files
+    * and batches of Spark's `FileStreamSource`, its `sources/0` log and
+    * offsets included, without building a Hadoop file index on every
+    * trigger. Every other `inPath` keeps Spark's text source: another
+    * scheme, a glob, a file sink's output (`_spark_metadata`), a
+    * `name=value` subdirectory, or `file:` on a file system that is not
+    * stock. The progress's `sources(0).description` names the source
+    * (`LocalTextSource[…]` or `FileStreamSource[…]`), and a checkpoint of
+    * either resumes under the other.
     *
     * The query runs on a clone of `spark` whose only change is that a
     * local `checkpoint` is written by [[LocalCheckpointFileManager]]:
@@ -64,7 +83,8 @@ object InferStream {
     * the returned handle's progress, whose `numInputRows` counts each
     * batch's lines on both of the sink's paths. An exception from `onDdl`
     * fails the query, unwrapped, before the batch commits: a restart on
-    * the same checkpoint reads the batch's files again. */
+    * the same checkpoint reads the batch's files again, and a caller-held
+    * `state` has not merged the batch, so the restart emits its DDL. */
   def run(
       spark: SparkSession,
       inPath: String,
@@ -78,7 +98,9 @@ object InferStream {
     val evo = state.getOrElse(new SchemaEvolution(typed))
     val session = GraftBridge.cloneSession(spark)
     session.conf.set(LocalCheckpointFileManager.ClassKey, classOf[LocalCheckpointFileManager].getName)
-    GraftBridge.startQuery(session.readStream.format("text").load(inPath),
+    val format = LocalTextSource.localDir(session, inPath)
+      .fold("text")(_ => classOf[LocalTextSourceProvider].getName)
+    GraftBridge.startQuery(session.readStream.format(format).load(inPath),
       new InferSink(evo, onDdl, tableName, location, typed), checkpoint, trigger)
   }
 

@@ -3,6 +3,7 @@ package org.apache.spark.sql
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
@@ -54,6 +55,11 @@ object GraftBridge {
     m.incBytesRead(bytes)
     m.incRecordsRead(records)
   }
+
+  /** A DataFrame over the analyzed `plan`, as Spark's own v1 sources
+    * return a micro-batch. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Starts the streaming `df` into `sink`, a v1 streaming sink instance,
     * in append mode, checkpointing to `checkpoint`: what

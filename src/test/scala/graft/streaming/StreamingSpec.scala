@@ -143,6 +143,131 @@ class StreamingSpec extends AnyFunSpec {
       assert(evo.validLines == 2 && evo.invalidLines == 0)
       assert(new java.io.File(s"$cp/commits/0").exists)
     }
+    it("merges a batch into a caller-held state only once onDdl returns, so a restart re-emits its DDL") {
+      val in = Files.createTempDirectory("graft-stream-held-in").toString
+      val cp = Files.createTempDirectory("graft-stream-held-cp").toString
+      write(in, "b1.ndjson", """{"a": 1}""", """{"b": "x"}""")
+      val evo = new InferStream.SchemaEvolution()
+      intercept[StreamingQueryException] {
+        InferStream.run(spark, in, cp, "t_stream_held", "/loc", _ => throw new IllegalStateException("register failed"),
+          trigger = Trigger.AvailableNow(), state = Some(evo)).awaitTermination()
+      }
+      assert(evo.schema.isEmpty && evo.validLines == 0 && evo.invalidLines == 0)
+      val ddls = scala.collection.mutable.ArrayBuffer.empty[String]
+      InferStream.run(spark, in, cp, "t_stream_held", "/loc", ddl => ddls.synchronized { ddls += ddl },
+        trigger = Trigger.AvailableNow(), state = Some(evo)).awaitTermination()
+      assert(ddls.size == 1 && ddls.head.contains("`a` STRING") && ddls.head.contains("`b` STRING"))
+      assert(evo.validLines == 2 && evo.invalidLines == 0)
+    }
+  }
+
+  describe("InferStream.run's source (who lists the watched directory)") {
+    import org.apache.spark.sql.execution.streaming.runtime.FileStreamSourceLog
+
+    def write(dir: Path, name: String, lines: String*): Path = {
+      val f = dir.resolve(name)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, lines.mkString("", "\n", "\n"))
+    }
+    /** Each logged batch of a checkpoint's first source: its files' paths
+      * and mtimes. */
+    def logged(cp: String): Seq[(Long, Set[(String, Long)])] =
+      new FileStreamSourceLog(FileStreamSourceLog.VERSION, spark, s"$cp/sources/0").get(None, None).toSeq
+        .map { case (id, files) => id -> files.map(f => f.path -> f.timestamp).toSet }
+    def inputRows(q: StreamingQuery): Seq[Long] =
+      q.recentProgress.filter(_.durationMs.containsKey("addBatch")).map(_.numInputRows).toSeq
+
+    it("reads the same batches as FileStreamSource: hidden names, subdirectories, old mtimes, touched files") {
+      val in = Files.createTempDirectory("graft-source-in")
+      val graftCp = Files.createTempDirectory("graft-source-cp").toString
+      val sparkCp = Files.createTempDirectory("graft-source-spark-cp").toString
+      val evo = new InferStream.SchemaEvolution()
+      /** One AvailableNow run of each query over `in` as it is now: each
+        * run's `numInputRows` per batch. */
+      def step(): (Seq[Long], Seq[Long]) = {
+        val g = InferStream.run(spark, in.toString, graftCp, "t_source", "/loc", _ => (),
+          trigger = Trigger.AvailableNow(), state = Some(evo))
+        g.awaitTermination()
+        val s = spark.readStream.text(in.toString).writeStream
+          .option("checkpointLocation", sparkCp)
+          .trigger(Trigger.AvailableNow())
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) => b.collect(); () }
+          .start()
+        s.awaitTermination()
+        assert(g.lastProgress == null || g.lastProgress.sources(0).description.startsWith("LocalTextSource["))
+        inputRows(g) -> inputRows(s)
+      }
+      val line = """{"a": 1}"""
+      write(in, "a.ndjson", line, line)
+      Files.createFile(in.resolve("empty.ndjson"))
+      // Logged as part of the batch, but never read.
+      write(in, "_metadata.ndjson", line)
+      // Hidden names, and files below the directory, which neither source
+      // lists while the directory has no partition column.
+      for (skipped <- Seq("_x.ndjson", ".x.ndjson", "x.ndjson._COPYING_", "sub/b.ndjson", "sub/deeper/c.ndjson",
+          "_dir/d.ndjson", ".dir/d.ndjson"))
+        write(in, skipped, line)
+      assert(step() == (Seq(2L), Seq(2L)))
+      // A new file older than every file seen so far, and a seen file
+      // touched again.
+      val old = write(in, "old.ndjson", line, line)
+      Files.setLastModifiedTime(old, java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600000L))
+      Files.setLastModifiedTime(in.resolve("a.ndjson"),
+        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000L))
+      assert(step() == (Seq(2L), Seq(2L)))
+      // Nothing new: no batch on either side.
+      assert(step() == (Nil, Nil))
+
+      val batches = logged(graftCp)
+      assert(batches == logged(sparkCp))
+      val root = in.toUri.getPath
+      assert(batches.map { case (id, files) => id -> files.map(_._1.stripPrefix("file://" + root)) } == Seq(
+        0L -> Set("a.ndjson", "empty.ndjson", "_metadata.ndjson"),
+        1L -> Set("old.ndjson")))
+      assert(evo.validLines == 4)
+    }
+
+    it("names graft's source for a plain local directory and FileStreamSource for each fallback") {
+      def dirWith(prefix: String, name: String): Path = {
+        val dir = Files.createTempDirectory(prefix)
+        write(dir, name, """{"a": 1}""", """{"b": 2}""")
+        dir
+      }
+      def session(confs: (String, String)*): SparkSession = {
+        val s = GraftBridge.cloneSession(spark)
+        confs.foreach { case (k, v) => s.conf.set(k, v) }
+        s
+      }
+      def description(s: SparkSession, inPath: String): String = {
+        val cp = Files.createTempDirectory("graft-which-cp").toString
+        val evo = new InferStream.SchemaEvolution()
+        val q = InferStream.run(s, inPath, cp, "t_which", "/loc", _ => (), trigger = Trigger.AvailableNow(),
+          state = Some(evo))
+        q.awaitTermination()
+        assert(evo.validLines == 2 && q.lastProgress.numInputRows == 2, inPath)
+        q.lastProgress.sources(0).description
+      }
+      val plain = dirWith("graft-which-plain", "a.ndjson")
+      for (inPath <- Seq(plain.toString, plain.toUri.toString, "file:" + plain.toUri.getPath))
+        assert(description(spark, inPath) == s"LocalTextSource[file:${plain.toUri.getPath.stripSuffix("/")}]")
+
+      // A file sink's output, read through the sink's log.
+      val sinkOut = Files.createTempDirectory("graft-which-sink").toString
+      spark.readStream.text(dirWith("graft-which-sink-in", "a.ndjson").toString).writeStream.format("text")
+        .option("path", sinkOut)
+        .option("checkpointLocation", Files.createTempDirectory("graft-which-sink-cp").toString)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      val fallbacks = Seq(
+        spark -> s"$plain/*",
+        spark -> dirWith("graft-which-part", "k=1/a.ndjson").toString,
+        spark -> sinkOut,
+        session("fs.grafttest.impl" -> classOf[graft.sources.GraftTestFileSystem].getName) ->
+          s"grafttest://$plain",
+        session("fs.file.impl" -> classOf[graft.sources.SubclassedLocalFileSystem].getName,
+          "fs.file.impl.disable.cache" -> "true") -> plain.toString)
+      for ((s, inPath) <- fallbacks)
+        assert(description(s, inPath).startsWith("FileStreamSource["), inPath)
+    }
   }
 
   describe("InferStream.run's sink (which path a micro-batch takes)") {
