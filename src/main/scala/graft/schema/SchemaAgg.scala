@@ -96,20 +96,24 @@ object SchemaInference {
     * Each partition folds its lines' UTF-8 bytes through [[ShapeFold]]:
     * valid JSON objects widen its schema, any other line (null included)
     * counts invalid. One `runJob` collects the partitions' [[JTypeCodec]]
-    * buffers, merged in partition-index order, so the job has one stage and
-    * no shuffle, and the schema equals the sequential fold, field order
-    * included ([[JType.merge]] is associative, keeping first-seen order).
+    * buffers (a one-range byte plan, below, runs none), merged in
+    * partition-index order, so the job has one stage and no shuffle, and
+    * the schema equals the sequential fold, field order included
+    * ([[JType.merge]] is associative, keeping first-seen order).
     *
     * Lines come one of two ways. When `df` is a plain scan of local,
     * uncompressed text files with default options (the whole test in
     * [[graft.sources.LineRanges.plan]]), the byte path
     * ([[rangeStats]]) reads the files in path order by byte range and
     * folds each line where it sits in the read buffer: no scan plan, no
-    * broadcast Hadoop conf, no row copy. Every other input (a filtered or
-    * joined plan, a remote, compressed or checksummed file, non-default
-    * text options) is planned and its rows folded ([[rowStats]]). Both
-    * give the lines Spark's text source gives; for several files, the
-    * field order is the fold's order over the files sorted by path.
+    * broadcast Hadoop conf, no row copy; a plan of one range sequence,
+    * which would be a one-task job, is folded on the calling thread and
+    * runs no job at all ([[rangeStats]] says what that gives up). Every
+    * other input (a filtered or joined plan, a remote, compressed or
+    * checksummed file, non-default text options) is planned and its rows
+    * folded ([[rowStats]]). Both give the lines Spark's text source gives;
+    * for several files, the field order is the fold's order over the files
+    * sorted by path.
     * [[graft.streaming.InferStream]]'s sink folds each micro-batch through
     * the same two paths. */
   def routedStats(df: DataFrame, col: String, typed: Boolean = false): RouteStats =
@@ -122,10 +126,28 @@ object SchemaInference {
         rowStats(column.queryExecution.toRdd, typed)
     }
 
-  /** The byte path: folds the lines of `ranges` ([[LineRanges.plan]]),
-    * one partition per range sequence. */
+  /** The byte path: folds the lines of `ranges` ([[LineRanges.plan]]).
+    * A plan of two or more range sequences runs as one job over
+    * [[LineRangeRDD]], one partition per sequence. A plan of at most one
+    * sequence, which that job would run as a single task, is folded on the
+    * calling thread through the same [[FoldRanges.fold]], and no job is
+    * submitted. Such an in-place fold:
+    *  - records no Spark task input metrics (the stream's `numInputRows`
+    *    is credited by [[graft.streaming.InferSink]] either way);
+    *  - cannot be cancelled through a job group; an interrupt of the
+    *    calling thread closes the file being read
+    *    (`ClosedByInterruptException`), which a streaming query's stop
+    *    takes as a stop;
+    *  - reads at most one split: at most `spark.sql.files.openCostInBytes`
+    *    and `maxPartitionBytes`, or `maxPartitionBytes` alone when
+    *    `defaultParallelism` is 1. */
   private[graft] def rangeStats(sc: SparkContext, ranges: IndexedSeq[Seq[FileRange]], typed: Boolean): RouteStats =
-    foldPartitions(new LineRangeRDD(sc, ranges), new FoldRanges(typed), typed)
+    if (ranges.size > 1) foldPartitions(new LineRangeRDD(sc, ranges), new FoldRanges(typed), typed)
+    else {
+      val f = new ShapeFold(typed)
+      FoldRanges.fold(ranges.iterator.flatten, f)
+      RouteStats(f.shape, f.nValid, f.nInvalid)
+    }
 
   /** The row path: folds column 0, a string, of every row of `rows`. */
   private[graft] def rowStats(rows: RDD[InternalRow], typed: Boolean): RouteStats =
@@ -163,11 +185,20 @@ private final class FoldRows(typed: Boolean) extends PartitionFold[InternalRow](
     rows.foreach(r => fold.add(r.getUTF8String(0)))
 }
 
-/** The byte path: each range's lines, read where they sit; the bytes and
-  * lines read count as the task's input, as a file scan's do. */
+/** The byte path's task, for a plan of two or more range sequences: each
+  * range's lines, read where they sit; the bytes and lines read count as
+  * the task's input, as a file scan's do. */
 private final class FoldRanges(typed: Boolean) extends PartitionFold[FileRange](typed) {
   protected def feed(context: TaskContext, ranges: Iterator[FileRange], fold: ShapeFold): Unit = {
-    val bytes = ranges.map(r => LineRanges.read(r)(line => fold.add(line))).sum
+    val bytes = FoldRanges.fold(ranges, fold)
     GraftBridge.addInput(context, bytes, fold.nValid + fold.nInvalid)
   }
+}
+
+private object FoldRanges {
+  /** Folds the lines of `ranges`, in order, into `fold`, each where it sits
+    * in the read buffer; returns the bytes read. The one per-range loop of
+    * both the job's task and [[SchemaInference.rangeStats]]'s in-place fold. */
+  def fold(ranges: Iterator[FileRange], into: ShapeFold): Long =
+    ranges.map(r => LineRanges.read(r)(line => into.add(line))).sum
 }

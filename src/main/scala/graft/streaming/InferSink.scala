@@ -21,12 +21,18 @@ import graft.sources.LineRanges
   * relation [[LineRanges.plan]] tests for batch input, so a plain batch
   * folds on the byte path and every other one folds the batch's own rows
   * (`queryExecution.toRdd`, what Spark's `ForeachBatchSink` executes): no
-  * second query is planned either way.
+  * second query is planned either way. A byte-path batch whose plan is
+  * one range sequence (a batch of at most `spark.sql.files.openCostInBytes`,
+  * 4 MB by default, when `defaultParallelism` is above 1) is folded on the
+  * stream thread itself and runs no Spark job
+  * ([[SchemaInference.rangeStats]]); a larger one runs one job. Stopping
+  * the query interrupts an in-place fold, which Spark takes as a stop.
   *
   * The byte path skips the scan, so it adds the batch's lines to the scan
   * leaf's `numOutputRows`, which `StreamingQueryProgress.numInputRows`
-  * reads. A batch that throws (in `onDdl` too) fails the query before its
-  * commit, so a restart folds it again: the DDL is emitted at least once.
+  * reads, with or without a job. A batch that throws (in `onDdl` too)
+  * fails the query before its commit, so a restart folds it again: the
+  * DDL is emitted at least once.
   * The batch is merged into `evo` only once `onDdl` returns, so a restart
   * with the same `evo` emits the DDL again and counts the lines once.
   *

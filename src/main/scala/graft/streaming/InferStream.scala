@@ -18,7 +18,8 @@ import graft.schema.{JNull, JType, RouteStats}
   * As the state is never lowered, batch cuts do not change the schema.
   * Each micro-batch reaches graft's own sink ([[InferSink]]) as the
   * batch's text relation, so a plain local batch folds off the file bytes
-  * as batch input does (the byte path), and any other batch folds the rows
+  * as batch input does (the byte path; on the stream thread, with no Spark
+  * job, when the batch is one range), and any other batch folds the rows
   * of the batch's own plan. A plain local directory is listed by graft's
   * own source ([[LocalTextSource]]), which keeps its listing state from
   * one trigger to the next.
@@ -34,13 +35,6 @@ object InferStream {
     /** Lines folded into the schema, and lines routed invalid, so far. */
     def validLines: Long = valid
     def invalidLines: Long = invalid
-    /** Merge a batch's lattice value; true iff the lowered schema changed. */
-    def merge(batch: JType): Boolean = synchronized {
-      val next = JType.merge(current, batch, typed)
-      val changed = JType.loweredChanged(current, next)
-      current = next
-      changed
-    }
     /** Merge a batch's routed stats, its lattice value and its counts.
       * When the lowered schema changes, the new schema goes to `onChange`
       * first, and the batch is merged only once that returns: a batch

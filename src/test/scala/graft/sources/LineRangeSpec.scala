@@ -190,22 +190,50 @@ class LineRangeSpec extends AnyFunSpec {
     val flowLines = Seq("""{"a":1,"b":{"c":"x"}}""", "nope", """{"d":[1,2],"a":"y"}""", "", """{"e":null}""")
     val plainText = flowLines.mkString("", "\n", "\n")
 
-    it("folds a plain local scan off the file bytes: one job, one stage, no FileScanRDD") {
+    def session(confs: (String, String)*): SparkSession = {
+      val s = GraftBridge.cloneSession(spark)
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      s
+    }
+    /** A session whose byte plans cut input into ranges of at most `bytes`. */
+    def splitAt(bytes: Int): SparkSession = session("spark.sql.files.maxPartitionBytes" -> bytes.toString)
+
+    /** A directory of two plain files, and the lines Spark reads from them. */
+    def twoFiles(): (Path, Seq[UTF8String]) = {
       val dir = Files.createTempDirectory("graft-lines-path")
       write(dir, "a.ndjson", bytes(plainText * 40))
       write(dir, "b.ndjson", bytes(plainText))
+      dir -> Seq("a.ndjson", "b.ndjson").flatMap(n => sparkLines(spark.read.text(dir.resolve(n).toString)))
+    }
+
+    it("folds a plain local scan off the file bytes: one job, one stage, no FileScanRDD") {
+      val (dir, want) = twoFiles()
+      val s = splitAt(1024)
+      assert(LineRanges.plan(JsonIngest.readLines(s, dir.toString), "value").exists(_.size >= 2))
       var stats: RouteStats = null
       val jobs = jobsOf {
-        stats = JsonIngest.inferRoutedStats(JsonIngest.readLines(spark, dir.toString), "value")
+        stats = JsonIngest.inferRoutedStats(JsonIngest.readLines(s, dir.toString), "value")
       }
       assert(jobs.size == 1, jobs)
       assert(jobs.head.size == 1, jobs)
       assert(jobs.head.head == Seq("LineRangeRDD"), jobs)
-      val want = Seq("a.ndjson", "b.ndjson").flatMap(n => sparkLines(spark.read.text(dir.resolve(n).toString)))
       assert(stats == seqStats(want, typed = false))
       // A projection of the value column keeps the byte path too.
-      val projected = JsonIngest.readLines(spark, dir.toString).select("value")
+      val projected = JsonIngest.readLines(s, dir.toString).select("value")
       assert(jobsOf(JsonIngest.inferRoutedStats(projected, "value")).flatten.flatten == Seq("LineRangeRDD"))
+    }
+
+    it("folds a one-range byte plan on the calling thread: no job, the same stats") {
+      val (dir, want) = twoFiles()
+      val df = JsonIngest.readLines(spark, dir.toString)
+      assert(LineRanges.plan(df, "value").map(_.size) == Some(1))
+      var stats: RouteStats = null
+      assert(jobsOf { stats = JsonIngest.inferRoutedStats(df, "value") }.isEmpty)
+      assert(stats == seqStats(want, typed = false))
+      val projected = df.select("value")
+      assert(LineRanges.plan(projected, "value").map(_.size) == Some(1))
+      assert(jobsOf { stats = JsonIngest.inferRoutedStats(projected, "value") }.isEmpty)
+      assert(stats == seqStats(want, typed = false))
     }
 
     /** Asserts `df` takes the row path and gives the stats of the lines
@@ -219,12 +247,6 @@ class LineRangeSpec extends AnyFunSpec {
       assert(stats == seqStats(sparkLines(df), typed = false), what)
     }
 
-    def session(confs: (String, String)*): SparkSession = {
-      val s = GraftBridge.cloneSession(spark)
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      s
-    }
-
     it("keeps the row path, with the same stats, for every input it cannot read as Spark would") {
       val plain = file(bytes(plainText))
       val base = JsonIngest.inferRoutedStats(JsonIngest.readLines(spark, plain.toString), "value")
@@ -235,11 +257,15 @@ class LineRangeSpec extends AnyFunSpec {
       rowPath(spark.read.option("wholetext", "true").text(plain.toString), "wholetext")
       rowPath(spark.read.option("wholetext", "false").text(plain.toString), "wholetext=false")
       // `basePath` only says where partition discovery starts; with no
-      // partition column it reads the same lines, so it keeps the byte path.
-      val based = spark.read.option("basePath", plain.getParent.toString).text(plain.getParent.toString)
-      var basedStats: RouteStats = null
-      assert(jobsOf { basedStats = JsonIngest.inferRoutedStats(based, "value") }.flatten.flatten == Seq("LineRangeRDD"))
-      assert(basedStats == base)
+      // partition column it reads the same lines, so it keeps the byte path:
+      // in place as one range, as one LineRangeRDD job as several.
+      for ((s, ranges, stages) <- Seq((spark, 1, Nil), (splitAt(16), 4, Seq(Seq(Seq("LineRangeRDD")))))) {
+        val based = s.read.option("basePath", plain.getParent.toString).text(plain.getParent.toString)
+        assert(LineRanges.plan(based, "value").map(_.size) == Some(ranges))
+        var basedStats: RouteStats = null
+        assert(jobsOf { basedStats = JsonIngest.inferRoutedStats(based, "value") } == stages)
+        assert(basedStats == base)
+      }
       for (key <- Seq("spark.sql.files.ignoreCorruptFiles", "spark.sql.files.ignoreMissingFiles"))
         rowPath(JsonIngest.readLines(session(key -> "true"), plain.toString), key)
       rowPath(JsonIngest.readLines(session(

@@ -293,7 +293,7 @@ class StreamingSpec extends AnyFunSpec {
       * job it ran, each batch's `numInputRows`, each drop's lines, and its
       * state. */
     final case class Ran(jobs: Seq[Seq[Seq[String]]], inputRows: Seq[Long], lines: Seq[Long],
-        evo: InferStream.SchemaEvolution)
+        evo: InferStream.SchemaEvolution, in: Path)
 
     /** Runs `InferStream` under `trigger` over `drops`, each of which
       * writes files into a directory and returns their lines; the files
@@ -325,18 +325,58 @@ class StreamingSpec extends AnyFunSpec {
       }
       val group = q.runId.toString
       val batches = q.recentProgress.filter(_.durationMs.containsKey("addBatch")).map(_.numInputRows).toSeq
-      Ran(jobs.collect { case (`group`, stages) => stages }, batches, lines.toSeq, evo)
+      Ran(jobs.collect { case (`group`, stages) => stages }, batches, lines.toSeq, evo, in)
     }
     def same(a: InferStream.SchemaEvolution, b: InferStream.SchemaEvolution): Boolean =
       a.schema == b.schema && a.validLines == b.validLines && a.invalidLines == b.invalidLines
 
+    /** The number of ranges of each batch's byte plan: the AvailableNow
+      * run's one batch holds both files, each ProcessingTime batch one. */
+    def ranges(s: SparkSession, now: Ran, timed: Ran): Seq[Option[Int]] =
+      (s.read.text(now.in.toString) +: Seq("a.ndjson", "b.ndjson").map(n => s.read.text(timed.in.resolve(n).toString)))
+        .map(df => graft.sources.LineRanges.plan(df, "value").map(_.size))
+
     it("folds a plain batch off the file bytes: one job, one stage, LineRangeRDD, under both triggers") {
-      val now = run(spark, Trigger.AvailableNow(), plain(_, "a.ndjson", 30), plain(_, "b.ndjson", 2))
+      // Ranges of at most 100 bytes: every batch's plan has several.
+      val s = session("spark.sql.files.maxPartitionBytes" -> "100")
+      val now = run(s, Trigger.AvailableNow(), plain(_, "a.ndjson", 30), plain(_, "b.ndjson", 2))
       assert(now.jobs == Seq(Seq(Seq("LineRangeRDD"))), now.jobs)
-      val timed = run(spark, Trigger.ProcessingTime(0L), plain(_, "a.ndjson", 30), plain(_, "b.ndjson", 2))
+      val timed = run(s, Trigger.ProcessingTime(0L), plain(_, "a.ndjson", 30), plain(_, "b.ndjson", 2))
       assert(timed.jobs == Seq.fill(2)(Seq(Seq("LineRangeRDD"))), timed.jobs)
+      assert(ranges(s, now, timed).forall(_.exists(_ >= 2)))
       assert(same(now.evo, timed.evo) && now.evo.validLines == 96 && now.evo.invalidLines == 64)
       assert(now.evo.schema.map(_.fieldNames.toSeq).contains(Seq("a", "b", "d", "e")))
+    }
+
+    it("folds a one-range plain batch on the stream thread: no job, under both triggers") {
+      val now = run(spark, Trigger.AvailableNow(), plain(_, "a.ndjson", 30), plain(_, "b.ndjson", 2))
+      val timed = run(spark, Trigger.ProcessingTime(0L), plain(_, "a.ndjson", 30), plain(_, "b.ndjson", 2))
+      assert(ranges(spark, now, timed) == Seq.fill(3)(Some(1)))
+      assert(now.jobs.isEmpty, now.jobs)
+      assert(timed.jobs.isEmpty, timed.jobs)
+      assert(same(now.evo, timed.evo) && now.evo.validLines == 96 && now.evo.invalidLines == 64)
+    }
+
+    it("stops a query while its batch folds in place, with no error") {
+      // One ~30 MB file, a single range under a 1 GB open cost.
+      val s = session("spark.sql.files.openCostInBytes" -> (1L << 30).toString)
+      val in = Files.createTempDirectory("graft-sink-stop-in")
+      val cp = Files.createTempDirectory("graft-sink-stop-cp")
+      val big = Files.createTempDirectory("graft-sink-stop-staged").resolve("big.ndjson")
+      val out = Files.newBufferedWriter(big)
+      try (0 until 500000).foreach(_ => out.write(text)) finally out.close()
+      assert(graft.sources.LineRanges.plan(s.read.text(big.toString), "value").map(_.size) == Some(1))
+      Files.move(big, in.resolve("big.ndjson"), StandardCopyOption.ATOMIC_MOVE)
+      val q = InferStream.run(s, in.toString, cp.toString, "t_sink_stop", "/loc", _ => (),
+        trigger = Trigger.ProcessingTime(0L))
+      // The batch's offsets are logged just before it runs.
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (!Files.exists(cp.resolve("offsets/0")) && System.nanoTime() < deadline) Thread.sleep(1)
+      Thread.sleep(50)
+      try q.stop() finally Files.delete(in.resolve("big.ndjson"))
+      // Wherever the stop landed (planning, the fold, the commit), it is a stop.
+      assert(!q.isActive)
+      assert(q.exception.isEmpty, q.exception)
     }
 
     it("folds a compressed file's or an ignoreCorruptFiles session's batch as rows, to the same state") {
@@ -572,7 +612,7 @@ class StreamingSpec extends AnyFunSpec {
       val evos = scala.collection.mutable.Map.empty[String, InferStream.SchemaEvolution]
       batches.foreach(_.groupBy(_._1).foreach { case (k, kls) =>
         evos.getOrElseUpdate(k, new InferStream.SchemaEvolution())
-          .merge(JsonIngest.inferRoutedStats(kls.map(_._2).toDF("value"), "value").shape)
+          .add(JsonIngest.inferRoutedStats(kls.map(_._2).toDF("value"), "value"))(_ => ())
       })
       evos.flatMap { case (k, evo) => evo.schema.map(s => k -> canon(s)) }.toMap
     }

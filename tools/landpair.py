@@ -14,8 +14,9 @@ the medians differ by more than the parent's interquartile range.
 With --trace the runs are traced (`run.py --trace 1`) and it prints, per
 seed and then as each side's median and quartiles, the per-layer metrics
 that attribute a streaming op's time: `streaming.*_ms`, `spark.driver_s`,
-`jvm.cpu_s` and `trace.op_p50_s`. Traced runs carry no end-to-end
-metrics, so they show where time went, never a claim.
+`jvm.cpu_s` and `trace.op_p50_s`, next to the load-insensitive work an op
+did: `spark.jobs`, `spark.executor_run_s` and `jvm.alloc_mb`. Traced runs
+carry no end-to-end metrics, so they show where time went, never a claim.
 
 It only calls run.py; nothing under landbench/ is edited. Do not edit the
 sources while a series runs: the build hashes them and would rebuild.
@@ -73,7 +74,8 @@ def main():
     if args.trace:
         better = {m["name"]: m["better"] for m in spec["per_layer"]
                   if m["name"].startswith("streaming.") and m["name"].endswith("_ms")
-                  or m["name"] in ("spark.driver_s", "jvm.cpu_s", "trace.op_p50_s")}
+                  or m["name"] in ("spark.driver_s", "jvm.cpu_s", "trace.op_p50_s",
+                                   "spark.jobs", "spark.executor_run_s", "jvm.alloc_mb")}
     scratch = Path(args.scratch or tempfile.mkdtemp(prefix="landpair-"))
     parent = scratch / "parent"
     if not parent.exists():
